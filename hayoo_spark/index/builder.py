@@ -1173,7 +1173,6 @@ def _commit_manifest(spark, index_dir, batch, elapsed, enc_avgdl,
 
 
 def finalize(spark: SparkSession, index_dir: str,
-             fuzzy_index: bool = True,
              per_term: DataFrame | None = None,
              term_dict: DataFrame | None = None) -> None:
     """Global term dictionary (df, cf) — sort-merge of segment postings,
@@ -1186,25 +1185,13 @@ def finalize(spark: SparkSession, index_dir: str,
     postings re-read would aggregate (tdf sums over salts to df,
     seg_cf to cf; term_h keys (field, term)), so the dictionary derives
     from cached relations instead of re-scanning the postings parquet.
-    Resume / multi-batch builds pass None and take the scan path.
-
-    ``fuzzy_index`` also writes ``terms_fuzzy/``: the SymSpell-style
-    deletion-1 neighborhood of the dictionary, (field, del_key, term,
-    df) where del_key ranges over {term} ∪ 1-deletions(term).  Two
-    terms are within edit distance 1 only if their key sets intersect,
-    so a fuzzy query probes O(len(term)) keys instead of sweeping the
-    whole dictionary (the reference's `~` flavor at web scale; the
-    exact edit-distance verify runs on the candidate bucket only)."""
+    Resume / multi-batch builds pass None and take the scan path."""
     n_parts = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
-    cached = per_term is not None and term_dict is not None
-    if cached:
+    if per_term is not None and term_dict is not None:
         agg = (per_term.groupBy("term_h")
                .agg(F.sum("tdf").alias("df"), F.sum("seg_cf").alias("cf"))
                .join(term_dict, "term_h")
                .select("field", "term", "df", "cf"))
-        # two consumers (terms write + fuzzy derivation) — persist the
-        # tiny dictionary instead of writing it out and reading it back
-        agg = agg.persist()
     else:
         post = spark.read.parquet(os.path.join(index_dir, "postings"))
         agg = (post.groupBy("field", "term")
@@ -1214,24 +1201,3 @@ def finalize(spark: SparkSession, index_dir: str,
      .sortWithinPartitions("term", "field")
      .write.mode("overwrite")
      .parquet(os.path.join(index_dir, "terms")))
-    if fuzzy_index:
-        terms = (agg if cached else
-                 spark.read.parquet(os.path.join(index_dir, "terms")))
-        # JVM-side deletion neighborhood; array_union dedups keys when a
-        # term has repeated characters (matches the python twin's set,
-        # query/plan.py fuzzy_keys)
-        dels = F.expr(
-            "transform(sequence(1, length(term)), i ->"
-            " concat(substring(term, 1, i - 1),"
-            "        substring(term, i + 1, length(term))))")
-        (terms
-         .filter(F.length("term") >= 1)
-         .withColumn("del_key",
-                     F.explode(F.array_union(F.array(F.col("term")), dels)))
-         .select("field", "del_key", "term", "df")
-         .repartitionByRange(n_parts, "del_key")
-         .sortWithinPartitions("del_key", "field", "term")
-         .write.mode("overwrite")
-         .parquet(os.path.join(index_dir, "terms_fuzzy")))
-    if cached:
-        agg.unpersist()

@@ -381,7 +381,7 @@ def _dedup_clusters_driver(spark, e: DataFrame) -> DataFrame:
         rx, ry = find(idx[int(x)]), find(idx[int(y)])
         if rx != ry:
             parent[rx if rx > ry else ry] = rx if rx < ry else ry
-    roots = np.array([find(i) for i in range(len(verts))])
+    roots = np.array([find(i) for i in range(len(verts))], np.int64)
     # component label = min vertex id in the component; roots are not
     # ordered by id, so take the min over members explicitly
     label = np.full(len(verts), np.iinfo(np.int64).max, np.int64)

@@ -8,11 +8,17 @@ SegmentEvaluator (results are identical; tested):
   local top-m, Spark merges (TakeOrderedAndProject).  The mode for a
   1000-executor cluster where segments outnumber driver memory.
 - ``local``: the serving-tier path — the driver reads only the needed
-  terms' posting rows per segment via pyarrow (row-group pruning works
-  because postings are sorted by term within each segment file) and
-  evaluates in-process.  Single-digit-ms latency, no job-scheduling
-  overhead; the shape a dedicated query node would use against the
-  same Iceberg/parquet segment files.
+  terms' posting rows per segment via pyarrow and evaluates
+  in-process.  Postings are term-sorted within each segment file, so
+  the term filter could skip row groups, but a segment file stays one
+  row group until it outgrows parquet's row-group size (true of every
+  index the tests and benchmarks build), so there it skips nothing.
+  Single-digit-ms latency, no job-scheduling overhead; the shape a
+  dedicated query node would use against the same Iceberg/parquet
+  segment files.
+
+Both modes expand and score against one term dictionary held on the
+driver, as Hunt holds its context indexes in memory (SURVEY.md §3).
 
 Query lifecycle per SURVEY.md §3.1: parse -> prefix expansion against
 the term dictionary (deterministic cap MAX_EXPANSIONS by df desc, term
@@ -47,9 +53,6 @@ RESULT_SCHEMA = StructType([
     StructField("score", DoubleType()),
 ])
 
-# load the term dictionary driver-side below this many bytes of parquet;
-# larger dictionaries stay distributed (web-scale: billions of terms)
-DICT_CACHE_BYTES = 256 * 1024 * 1024
 #: reduce-side task count for distributed serving queries (see
 #: warm(distributed=True)); a real cluster sizes this to executors
 SERVING_SHUFFLE_PARTITIONS = 8
@@ -65,7 +68,6 @@ ROWS_CACHE_BYTES = 512 * 1024 * 1024
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
                  mode: str = "local",
-                 dict_cache_bytes: int = DICT_CACHE_BYTES,
                  rows_cache_bytes: int = ROWS_CACHE_BYTES,
                  segments: tuple[int, ...] | None = None):
         from ..index import snapshot
@@ -73,10 +75,81 @@ class SearchEngine:
         # a snapshot root resolves to its live version ONCE here — the
         # engine keeps a consistent view of that version's (immutable)
         # files even while snapshot_update publishes newer ones
-        self.index_dir = index_dir = snapshot.resolve(index_dir)
+        self.index_dir = snapshot.resolve(index_dir)
         self.mode = mode
+        # serving metrics: EKG-analogue counters + latency distributions
+        # per operation (reference /stats surface, Metrics.hs:43-78)
+        from .metrics import MetricsStore
+        self._metrics = MetricsStore()
+        # segment-sharded serving: an engine restricted to a slice of
+        # the segment universe is the per-PROCESS scale-out unit (the
+        # GIL bounds one process's evaluation throughput; the reference
+        # scales by running more Hunt servers, Makefile:32-34).  Shards
+        # score with GLOBAL df/avgdl (terms/ and stats/ are corpus-
+        # wide), so a merge of shard top-k lists is exactly the
+        # unsharded top-k.
+        self._sharded = segments is not None
+        self._shard = None if segments is None else {int(s) for s in segments}
+        # per-host shared decode cache for the grouped-map path (see
+        # wand.enable_shm_postings_cache); settable to "" to disable
+        shm_root = os.environ.get("HAYOO_SHM_CACHE", "/dev/shm")
+        # per-uid dir, created 0700 + ownership-verified in
+        # enable_shm_postings_cache (ADVICE r6: a world-shared fixed
+        # path lets another local user plant poisoned posting arrays)
+        self._shm_cache_dir = (
+            os.path.join(shm_root, f"hayoo_decode_cache.{os.getuid()}")
+            if shm_root and os.path.isdir(shm_root) else None)
+        # the DRIVER joins the host cache too: warm()'s prewarm then
+        # publishes its decodes, so grouped-map workers mmap the Zipf
+        # head instead of stampeding the postings parquet 32-wide on
+        # the first heavy phrase (and a restarted serving process
+        # re-warms from tmpfs in milliseconds)
+        enable_shm_postings_cache(self._shm_cache_dir)
+        # serving-tier raw-rows cache: (field, term) -> {segment: [row]}
+        # (LRU by encoded bytes; emptied by every _load)
+        self._rows_mem: dict[tuple[str, str], dict[int, list]] = {}
+        self._rows_mem_bytes = 0
+        self._rows_mem_budget = rows_cache_bytes
+        # ONE analyzed postings relation for distributed-mode queries,
+        # built on first use: a fresh spark.read.parquet per query
+        # re-lists files and re-reads footers — a fixed few-hundred-ms
+        # tax per query that dominates the distributed p50 (VERDICT r3
+        # item 7).  warm(distributed=True) additionally persists it in
+        # executor memory (the cluster analogue of Hunt's index-in-RAM
+        # startup; opt-in because the FULL postings relation only fits
+        # executor memory at bench scales — a real deployment persists
+        # the hot fields/terms projection instead)
+        self._post_df = None
+        self._post_df_persisted = False
+        self._post_df_stamp: tuple | None = None
+        # one engine serves concurrent queries (a server's request
+        # threads): the LRU, the lazy-built maps and reloads mutate
+        # under this lock; reads of immutable loaded rows need none
+        import threading
+        self._lock = threading.RLock()
+        # admission gate for the GIL-bound numpy evaluation: concurrent
+        # request threads interleaving small-batch numpy work convoy on
+        # the GIL (measured: serial 83 qps, 8 free-running threads 12) —
+        # queueing them through one gate keeps aggregate throughput at
+        # the serial rate while I/O (pyarrow reads, GIL-releasing) still
+        # overlaps outside it.  Scale-out beyond one process is the
+        # distributed mode / more serving processes.
+        self._eval_gate = threading.Lock()
+        self._stamp: tuple | None = None
+        with self._lock:
+            self._load(self._postings_stamp())
+
+    def _load(self, stamp: tuple) -> None:
+        """(Re)read what the engine derives from the index files: global
+        stats and field schema, the bound scales, the term dictionary
+        and the segment universe.  Runs at open, and again whenever
+        ``stamp`` shows that an in-place update rewrote the index.  The
+        caller holds ``self._lock``; queries do not take it to read, so
+        one running during a reload may mix old and new values (a
+        snapshot root publishes each update whole, as a new version)."""
+        index_dir = self.index_dir
         srows = sorted(
-            spark.read.parquet(os.path.join(index_dir, "stats")).collect(),
+            self.spark.read.parquet(os.path.join(index_dir, "stats")).collect(),
             key=lambda r: r["fkey"])
         self.n_docs = srows[0]["n_docs"]
         # per-field BM25F stats + schema (weights / default-search set);
@@ -98,28 +171,21 @@ class SearchEngine:
         # covers every segment.  A cross-field ratio (max-now/min-enc)
         # would inflate bounds ~body-avgdl/title-avgdl on multi-field
         # indexes and disable pruning outright (ADVICE r2).
-        man = spark.read.parquet(os.path.join(index_dir, "manifest"))
+        man = self.spark.read.parquet(os.path.join(index_dir, "manifest"))
         self.ub_scale = self._ub_scales(man)
-        # serving metrics: EKG-analogue counters + latency distributions
-        # per operation (reference /stats surface, Metrics.hs:43-78)
-        from .metrics import MetricsStore
-        self._metrics = MetricsStore()
-
-        self._terms_df = spark.read.parquet(os.path.join(index_dir, "terms"))
-        # driver dict: per field, term-sorted arrays (cutover to the
-        # distributed dictionary above DICT_CACHE_BYTES — web scale)
-        self._dict: dict[str, tuple[list[str], np.ndarray]] | None = None
-        size = sum(os.path.getsize(p) for p in glob.glob(
-            os.path.join(index_dir, "terms", "*.parquet")))
-        if size <= dict_cache_bytes:
-            import pyarrow.parquet as pq
-            t = pq.read_table(os.path.join(index_dir, "terms"),
-                              columns=["field", "term", "df"]).to_pandas()
-            self._dict = {}
-            for f, sub in t.groupby("field"):
-                sub = sub.sort_values("term", kind="mergesort")
-                self._dict[f] = (sub["term"].tolist(),
-                                 sub["df"].to_numpy(np.int64))
+        # the term dictionary lives on the driver, as Hunt holds its
+        # context indexes in memory: per field, term-sorted arrays
+        import pyarrow.parquet as pq
+        t = pq.read_table(os.path.join(index_dir, "terms"),
+                          columns=["field", "term", "df"]).to_pandas()
+        by_field: dict[str, tuple[list[str], np.ndarray]] = {}
+        for f, sub in t.groupby("field"):
+            sub = sub.sort_values("term", kind="mergesort")
+            by_field[f] = (sub["term"].tolist(), sub["df"].to_numpy(np.int64))
+        self._dict = by_field
+        # per-field SymSpell deletion maps, built lazily on first fuzzy
+        # query over the dictionary
+        self._del_maps: dict[str, dict[str, list[int]]] = {}
         # segment universe comes from docs/, a SUPERSET of postings/: a
         # segment whose docs all tokenize to empty (drop_empty=False)
         # writes no postings dir, but its docs must stay visible to
@@ -127,71 +193,23 @@ class SearchEngine:
         self._segments = sorted(
             int(os.path.basename(p).split("=")[1]) for p in
             glob.glob(os.path.join(index_dir, "docs", "segment=*")))
-        # segment-sharded serving: an engine restricted to a slice of
-        # the segment universe is the per-PROCESS scale-out unit (the
-        # GIL bounds one process's evaluation throughput; the reference
-        # scales by running more Hunt servers, Makefile:32-34).  Shards
-        # score with GLOBAL df/avgdl (terms/ and stats/ are corpus-
-        # wide), so a merge of shard top-k lists is exactly the
-        # unsharded top-k.
-        self._sharded = segments is not None
-        if segments is not None:
-            wanted = set(int(s) for s in segments)
-            self._segments = [s for s in self._segments if s in wanted]
+        if self._sharded:
+            self._segments = [s for s in self._segments if s in self._shard]
         # the process-wide docs cache must hold this engine's whole
         # segment set or every warm query re-reads the evicted tables
         ensure_docs_cache_capacity(len(self._segments))
-        # per-host shared decode cache for the grouped-map path (see
-        # wand.enable_shm_postings_cache); settable to "" to disable
-        shm_root = os.environ.get("HAYOO_SHM_CACHE", "/dev/shm")
-        # per-uid dir, created 0700 + ownership-verified in
-        # enable_shm_postings_cache (ADVICE r6: a world-shared fixed
-        # path lets another local user plant poisoned posting arrays)
-        self._shm_cache_dir = (
-            os.path.join(shm_root, f"hayoo_decode_cache.{os.getuid()}")
-            if shm_root and os.path.isdir(shm_root) else None)
-        # the DRIVER joins the host cache too: warm()'s prewarm then
-        # publishes its decodes, so grouped-map workers mmap the Zipf
-        # head instead of stampeding the postings parquet 32-wide on
-        # the first heavy phrase (and a restarted serving process
-        # re-warms from tmpfs in milliseconds)
-        enable_shm_postings_cache(self._shm_cache_dir)
-        # serving-tier raw-rows cache: (field, term) -> {segment: [row]}
-        # (LRU by encoded bytes; invalidated when any postings segment
-        # dir changes — same mtime contract as the decoded cache)
-        self._rows_mem: dict[tuple[str, str], dict[int, list]] = {}
+        self._rows_mem.clear()
         self._rows_mem_bytes = 0
-        self._rows_mem_budget = rows_cache_bytes
-        self._rows_stamp: tuple | None = None
-        # per-field SymSpell deletion maps, built lazily on first fuzzy
-        # query over the driver-cached dictionary
-        self._del_maps: dict[str, dict[str, list[int]]] = {}
-        # ONE analyzed postings relation for distributed-mode queries:
-        # a fresh spark.read.parquet per query re-lists files and
-        # re-reads footers — a fixed few-hundred-ms tax per query that
-        # dominates the distributed p50 (VERDICT r3 item 7).  The
-        # relation is lazy; warm(distributed=True) additionally persists
-        # it in executor memory (the cluster analogue of Hunt's
-        # index-in-RAM startup; opt-in because the FULL postings
-        # relation only fits executor memory at bench scales — a real
-        # deployment persists the hot fields/terms projection instead)
-        self._post_df = spark.read.parquet(
-            os.path.join(index_dir, "postings"))
-        self._post_df_persisted = False
-        self._post_df_stamp = self._postings_stamp()
-        # one engine serves concurrent queries (a server's request
-        # threads): the LRU and lazy-built maps mutate under this lock;
-        # reads of immutable loaded rows need none
-        import threading
-        self._lock = threading.RLock()
-        # admission gate for the GIL-bound numpy evaluation: concurrent
-        # request threads interleaving small-batch numpy work convoy on
-        # the GIL (measured: serial 83 qps, 8 free-running threads 12) —
-        # queueing them through one gate keeps aggregate throughput at
-        # the serial rate while I/O (pyarrow reads, GIL-releasing) still
-        # overlaps outside it.  Scale-out beyond one process is the
-        # distributed mode / more serving processes.
-        self._eval_gate = threading.Lock()
+        self._stamp = stamp
+
+    def _sync(self) -> None:
+        """Reload if an in-place update rewrote the index since the last
+        load — one stamp check per query."""
+        stamp = self._postings_stamp()
+        if stamp != self._stamp:
+            with self._lock:
+                if stamp != self._stamp:
+                    self._load(stamp)
 
     def _ub_scales(self, man) -> dict[str, float]:
         """Per-field admissibility factors for stored block bounds."""
@@ -227,89 +245,62 @@ class SearchEngine:
             return (field,)
         return ()
 
-    def _dict_prefix_range(self, prefix: str,
-                           fields: tuple[str, ...]) -> list[tuple[str, int]]:
-        """(term, summed df over `fields`) under `prefix` — ranking
-        candidates across the searched field set."""
-        acc: dict[str, int] = {}
+    def _df(self, field: str, term: str) -> int:
+        terms, dfs = self._dict.get(field, ([], None))
+        i = bisect.bisect_left(terms, term)
+        return int(dfs[i]) if i < len(terms) and terms[i] == term else 0
+
+    def _prefix_scores(self, prefix: str, fields: tuple[str, ...],
+                       weighted: bool = False) -> list[tuple[str, float]]:
+        """(term, score) under `prefix`, best first: score is df summed
+        over `fields`, each field's df times its weight if `weighted`."""
+        acc: dict[str, float] = {}
         for f in fields:
             d = self._dict.get(f)
             if d is None:
                 continue
+            w = self.field_weights.get(f, 1.0) if weighted else 1
             terms, dfs = d
             lo = bisect.bisect_left(terms, prefix)
-            hi = bisect.bisect_left(terms, prefix + "￿")
+            hi = bisect.bisect_left(terms, prefix + "\uffff")
             for i in range(lo, hi):
-                acc[terms[i]] = acc.get(terms[i], 0) + int(dfs[i])
-        return list(acc.items())
+                acc[terms[i]] = acc.get(terms[i], 0) + w * int(dfs[i])
+        return sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))
 
     def expand_prefix(self, prefix: str,
                       field: str = P.DEFAULT_FIELD) -> list[str]:
-        fields = self._expand_fields(field)
-        if self._dict is not None:
-            cands = self._dict_prefix_range(prefix, fields)
-            cands.sort(key=lambda kv: (-kv[1], kv[0]))
-            return [t for t, _ in cands[: P.MAX_EXPANSIONS]]
-        rows = (
-            self._terms_df
-            .filter(F.col("field").isin(list(fields))
-                    & F.col("term").startswith(prefix))
-            .groupBy("term").agg(F.sum("df").alias("df"))
-            .orderBy(F.col("df").desc(), F.col("term"))
-            .limit(P.MAX_EXPANSIONS)
-            .collect()
-        )
-        return [r["term"] for r in rows]
+        cands = self._prefix_scores(prefix, self._expand_fields(field))
+        return [t for t, _ in cands[: P.MAX_EXPANSIONS]]
 
     def _fuzzy_candidates(self, term: str,
                           fields: tuple[str, ...]) -> list[tuple[str, str, int]]:
         """UNVERIFIED (field, term, df) candidates whose deletion-1 key
         sets intersect the query term's — a small superset of the true
-        edit-distance-1 neighborhood, never a dictionary sweep.
-
-        Sources, by index layout: the lazily-built driver deletion map
-        (cached-dict path), else the ``terms_fuzzy`` parquet probed on
-        del_key (filter pushdown + row-group pruning — the web-scale
-        path: O(len(term)) key lookups against 10^9 terms), else a
-        legacy full F.levenshtein scan (pre-fuzzy-table indexes)."""
-        keys = P.fuzzy_keys(term)
+        edit-distance-1 neighborhood, never a dictionary sweep: each
+        field's deletion map (built lazily from the dictionary) answers
+        O(len(term)) key lookups."""
         out: list[tuple[str, str, int]] = []
-        if self._dict is not None:
-            for f in fields:
+        for f in fields:
+            # under the lock, the dictionary and its map come from one load
+            with self._lock:
                 d = self._dict.get(f)
                 if d is None:
                     continue
-                with self._lock:
-                    dm = self._del_maps.get(f)
-                    if dm is None:
-                        terms, _ = d
-                        dm = {}
-                        for i, t in enumerate(terms):
-                            for k in P.fuzzy_keys(t):
-                                dm.setdefault(k, []).append(i)
-                        self._del_maps[f] = dm
                 terms, dfs = d
-                seen: set[int] = set()
-                for k in keys:
-                    for i in dm.get(k, ()):
-                        if i not in seen:
-                            seen.add(i)
-                            out.append((f, terms[i], int(dfs[i])))
-            return out
-        fz = os.path.join(self.index_dir, "terms_fuzzy")
-        if os.path.exists(fz):
-            import pyarrow.parquet as pq
-            t = pq.read_table(
-                fz, filters=[("del_key", "in", sorted(keys)),
-                             ("field", "in", list(fields))]).to_pandas()
-            t = t.drop_duplicates(["field", "term"])
-            return list(zip(t["field"], t["term"], t["df"].astype(int)))
-        rows = (self._terms_df
-                .filter(F.col("field").isin(list(fields))
-                        & (F.levenshtein(F.col("term"), F.lit(term)) <= 1))
-                .groupBy("field", "term").agg(F.sum("df").alias("df"))
-                .collect())
-        return [(r["field"], r["term"], r["df"]) for r in rows]
+                dm = self._del_maps.get(f)
+                if dm is None:
+                    dm = {}
+                    for i, t in enumerate(terms):
+                        for k in P.fuzzy_keys(t):
+                            dm.setdefault(k, []).append(i)
+                    self._del_maps[f] = dm
+            seen: set[int] = set()
+            for k in P.fuzzy_keys(term):
+                for i in dm.get(k, ()):
+                    if i not in seen:
+                        seen.add(i)
+                        out.append((f, terms[i], int(dfs[i])))
+        return out
 
     def expand_fuzzy(self, term: str,
                      field: str = P.DEFAULT_FIELD) -> list[str]:
@@ -360,20 +351,7 @@ class SearchEngine:
         return out
 
     def _idf_map(self, pairs: set[tuple[str, str]]) -> dict:
-        if not pairs:
-            return {}
-        if self._dict is not None:
-            out = {}
-            for f, t in pairs:
-                tl, dfs = self._dict.get(f, ([], np.zeros(0, np.int64)))
-                i = bisect.bisect_left(tl, t)
-                df = int(dfs[i]) if i < len(tl) and tl[i] == t else 0
-                out[(f, t)] = self.idf(df)
-            return out
-        rows = self._terms_df.filter(
-            F.col("term").isin(list({t for _, t in pairs}))).collect()
-        dfs = {(r["field"], r["term"]): r["df"] for r in rows}
-        return {(f, t): self.idf(dfs.get((f, t), 0)) for f, t in pairs}
+        return {(f, t): self.idf(self._df(f, t)) for f, t in pairs}
 
     # ---------------- search ----------------
 
@@ -398,6 +376,7 @@ class SearchEngine:
 
     def _search_ast_unmetered(self, ast: P.Node, k: int, page: int,
                               mode: str | None) -> list[tuple[str, float]]:
+        self._sync()
         ast = self._rewrite_prefixes(ast)
         needed = self._scoring_pairs(ast)
         m = (page + 1) * k
@@ -411,17 +390,15 @@ class SearchEngine:
 
     def _postings_df(self):
         """The shared distributed postings relation, re-analyzed only
-        when a postings segment dir changes (same mtime contract as the
-        serving caches) — incremental updates invalidate it."""
-        stamp = self._postings_stamp()
+        after a reload (an incremental update invalidates it)."""
         with self._lock:
-            if stamp != self._post_df_stamp:
+            if self._post_df_stamp != self._stamp:
                 if self._post_df_persisted:
                     self._post_df.unpersist()
                 self._post_df = self.spark.read.parquet(
                     os.path.join(self.index_dir, "postings"))
                 self._post_df_persisted = False
-                self._post_df_stamp = stamp
+                self._post_df_stamp = self._stamp
             return self._post_df
 
     def _search_spark(self, ast, needed, m):
@@ -515,9 +492,22 @@ class SearchEngine:
         return [(r["url"], r["score"]) for r in top]
 
     def _postings_stamp(self) -> tuple:
-        dirs = sorted(glob.glob(
-            os.path.join(self.index_dir, "postings", "segment=*")))
-        return tuple((d, os.path.getmtime(d)) for d in dirs)
+        """Modification times of the postings segment dirs and of the
+        dirs _load reads: an in-place update rewrites all of them."""
+        out: list[tuple[str, int]] = []
+        try:
+            with os.scandir(os.path.join(self.index_dir, "postings")) as it:
+                out = sorted((e.name, e.stat().st_mtime_ns) for e in it
+                             if e.name.startswith("segment="))
+        except FileNotFoundError:  # no postings, or an update mid-rewrite
+            pass
+        for d in ("stats", "terms", "manifest"):
+            try:
+                out.append(
+                    (d, os.stat(os.path.join(self.index_dir, d)).st_mtime_ns))
+            except FileNotFoundError:
+                pass
+        return tuple(out)
 
     @staticmethod
     def _rows_bytes(by: dict[int, list]) -> int:
@@ -526,9 +516,13 @@ class SearchEngine:
 
     def _read_pairs(self, missing: list[tuple[str, str]],
                     ) -> dict[tuple[str, str], dict[int, list]]:
-        """Parquet read for cache-missing pairs — ONE dataset scan,
-        row-group-pruned via the term filter since postings are
-        term-sorted per file.  Called WITHOUT the engine lock held."""
+        """Parquet read for cache-missing pairs — ONE dataset scan with
+        the term filter pushed down.  Postings are term-sorted per file,
+        so the filter could skip row groups, but a segment's file is a
+        single row group until it outgrows parquet's row-group size
+        (every index the tests and benchmarks build): there the filter
+        prunes nothing and each read decodes whole files.  Called
+        WITHOUT the engine lock held."""
         import pyarrow.parquet as pq
         filters = [("term", "in", sorted({t for _, t in missing})),
                    ("field", "in", sorted({f for f, _ in missing}))]
@@ -555,22 +549,18 @@ class SearchEngine:
         The lock covers only the stamp check / cache bookkeeping, NOT
         the parquet read: a cold (cache-missing) query must not
         head-of-line block fully-warm concurrent queries.  If the index
-        is swapped under a read (stamp changes), the stale rows are
-        discarded and the fetch retries against the new postings."""
+        is reloaded under a read (_sync saw an update), the stale rows
+        are discarded and the fetch retries against the new postings."""
         while True:
             with self._lock:
-                stamp = self._postings_stamp()
-                if stamp != self._rows_stamp:
-                    self._rows_mem.clear()
-                    self._rows_mem_bytes = 0
-                    self._rows_stamp = stamp
+                stamp = self._stamp
                 missing = [p for p in pairs if p not in self._rows_mem]
                 if not missing:
                     return self._assemble_locked(pairs)
             got = self._read_pairs(missing)  # lock dropped: slow I/O
             with self._lock:
-                if self._rows_stamp != stamp:
-                    continue  # index replaced mid-read: rows are stale
+                if self._stamp != stamp:
+                    continue  # index reloaded mid-read: rows are stale
                 for p, by in got.items():
                     if p in self._rows_mem:  # raced with another cold query
                         continue
@@ -623,29 +613,14 @@ class SearchEngine:
         on first touch (the sf10 cold tail: a Zipf-head bigram's first
         phrase query decoded ~30x slower than its steady state) — the
         Zipf head is exactly the set a cold heavy phrase will hit."""
+        self._sync()
         pairs: set[tuple[str, str]] = set()
         pos_pairs: set[tuple[str, str]] = set()
-        if self._dict is not None:
-            for f in self.default_fields:
-                terms, dfs = self._dict.get(f, ([], np.zeros(0, np.int64)))
-                if not terms:
-                    continue
-                top = np.argsort(dfs, kind="stable")[::-1][:top_terms]
-                pairs |= {(f, terms[i]) for i in top}
-                pos_pairs |= {(f, terms[i])
-                              for i in top[:min(positions_top, len(top))]}
-        else:
-            # distributed dictionary: one small ordered head per field
-            # (positions_top applies here too — the cold-phrase prewarm
-            # must not silently no-op just because the dict spilled)
-            for f in self.default_fields:
-                rows = (self._terms_df
-                        .filter(F.col("field") == f)
-                        .orderBy(F.col("df").desc(), "term")
-                        .select("term").limit(top_terms).collect())
-                pairs |= {(f, r["term"]) for r in rows}
-                pos_pairs |= {(f, r["term"]) for r in
-                              rows[:min(positions_top, len(rows))]}
+        for f in self.default_fields:
+            terms, dfs = self._dict.get(f, ([], np.zeros(0, np.int64)))
+            top = np.argsort(dfs, kind="stable")[::-1][:top_terms]
+            pairs |= {(f, terms[i]) for i in top}
+            pos_pairs |= {(f, terms[i]) for i in top[:positions_top]}
         if pairs:
             self._fetch_rows(pairs)
         if pos_pairs and positions_top:
@@ -689,7 +664,6 @@ class SearchEngine:
                 if self._post_df_persisted:
                     self._post_df.unpersist()
                     self._post_df_persisted = False
-                stamp = self._postings_stamp()
                 # position streams stay OUT of the serving cache: no
                 # query ships them (see _search_spark) — excluding them
                 # here makes the persisted relation ~5x smaller and its
@@ -710,7 +684,7 @@ class SearchEngine:
                     max(1, int(shuffle_partitions)), "segment")
                 self._post_df.persist()
                 self._post_df_persisted = True
-                self._post_df_stamp = stamp
+                self._post_df_stamp = self._stamp
             self._post_df.count()  # materialize the cache before serving
         return len(pairs)
 
@@ -769,10 +743,8 @@ class SearchEngine:
     #: still has >= this many postings per segment (the candidate set
     #: is DENSE, so positions_for will fall back to the full decode
     #: anyway) and (b) the term's own stream is big enough to matter.
-    PHRASE_PREWARM_CAND_PER_SEG = int(os.environ.get(
-        "HAYOO_PHRASE_PREWARM_CAND", "64"))
-    PHRASE_PREWARM_MIN_BYTES = int(os.environ.get(
-        "HAYOO_PHRASE_PREWARM_BYTES", str(1 << 21)))
+    PHRASE_PREWARM_CAND_PER_SEG = 64
+    PHRASE_PREWARM_MIN_BYTES = 1 << 21
 
     def _prewarm_phrase_positions(self, ast, seg_rows: dict) -> None:
         """Cold-phrase tail killer (VERDICT r5 item 1): a heavy phrase's
@@ -781,7 +753,7 @@ class SearchEngine:
         decode is both INEVITABLE (dense candidates) and LARGE, and run
         those decodes across segments on the GIL-releasing thread pool
         first; the serial evaluation then hits the decoded cache."""
-        if self._dict is None or not seg_rows:
+        if not seg_rows:
             return
         phrases = self._collect_phrases(ast)
         if not phrases:
@@ -790,12 +762,7 @@ class SearchEngine:
         heavy: set[tuple[str, str]] = set()
         for node in phrases:
             for f in self._expand_fields(node.field):
-                tl, dfs = self._dict.get(f, ([], np.zeros(0, np.int64)))
-                term_df = {}
-                for t in node.terms:
-                    i = bisect.bisect_left(tl, t)
-                    term_df[t] = (int(dfs[i])
-                                  if i < len(tl) and tl[i] == t else 0)
+                term_df = {t: self._df(f, t) for t in node.terms}
                 if not term_df or (min(term_df.values()) / n_segs
                                    < self.PHRASE_PREWARM_CAND_PER_SEG):
                     continue  # sparse candidates: selective path wins
@@ -1053,35 +1020,10 @@ class SearchEngine:
     def _autocomplete_unmetered(self, prefix: str, n: int = 20,
                                 fields: tuple[str, ...] | None = None,
                                 ) -> list[tuple[str, float]]:
-        search_fields = fields or self.default_fields
-        if self._dict is not None:
-            acc: dict[str, float] = {}
-            for f in search_fields:
-                d = self._dict.get(f)
-                if d is None:
-                    continue
-                w = self.field_weights.get(f, 1.0)
-                terms, dfs = d
-                lo = bisect.bisect_left(terms, prefix)
-                hi = bisect.bisect_left(terms, prefix + "￿")
-                for i in range(lo, hi):
-                    acc[terms[i]] = acc.get(terms[i], 0.0) + w * float(dfs[i])
-            cands = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))
-            return cands[:n]
-        wmap = F.create_map(*[
-            F.lit(x) for f in search_fields
-            for x in (f, float(self.field_weights.get(f, 1.0)))])
-        rows = (
-            self._terms_df
-            .filter(F.col("field").isin(list(search_fields))
-                    & F.col("term").startswith(prefix))
-            .groupBy("term")
-            .agg(F.sum(wmap[F.col("field")] * F.col("df")).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("term"))
-            .limit(n)
-            .collect()
-        )
-        return [(r["term"], float(r["score"])) for r in rows]
+        self._sync()
+        cands = self._prefix_scores(prefix, fields or self.default_fields,
+                                    weighted=True)
+        return cands[:n]
 
     def autocomplete_queries(self, q: str, n: int = 20) -> list[str]:
         """FULL-QUERY completion — the reference autocomplete pipeline

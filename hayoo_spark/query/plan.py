@@ -141,9 +141,9 @@ def fuzzy_keys(term: str) -> set[str]:
     lev(a, b) <= 1  ⟹  fuzzy_keys(a) ∩ fuzzy_keys(b) ≠ ∅  (equal terms
     share themselves; a substitution shares the both-deleted string; an
     insertion/deletion pair shares the shorter term), so probing these
-    keys against the finalize-time ``terms_fuzzy`` table yields a
-    candidate superset — exact-verified with edit_distance_le1.  Twin of
-    the JVM expression in index/builder.finalize."""
+    keys against a deletion map of the dictionary (SearchEngine's
+    per-field ``_del_maps``) yields a candidate superset —
+    exact-verified with edit_distance_le1."""
     return {term} | {term[:i] + term[i + 1:] for i in range(len(term))}
 
 

@@ -54,7 +54,7 @@ def ensure_docs_cache_capacity(n_segments: int) -> None:
 # decoded posting lists survive across queries (hot query terms):
 # key = (postings_root, segment, term) -> (ids, tfs, block_last, block_ub)
 _POSTINGS_CACHE: dict[tuple, tuple] = {}
-_POSTINGS_CACHE_MAX = int(_os.environ.get("HAYOO_POSTINGS_CACHE", "8192"))
+_POSTINGS_CACHE_MAX = 8192
 _POSTINGS_CACHE_LOCK = threading.Lock()
 
 # ---- shared per-HOST decode cache (distributed mode) ----------------
@@ -72,8 +72,7 @@ _POSTINGS_CACHE_LOCK = threading.Lock()
 # floor.  On a real cluster this is a per-executor-host cache tier —
 # exactly the thing a serving fleet provisions next to the JVM.
 _SHM_CACHE_DIR: str | None = None
-_SHM_FREE_FLOOR = int(_os.environ.get("HAYOO_SHM_CACHE_FLOOR_MB",
-                                      "2048")) * (1 << 20)
+_SHM_FREE_FLOOR = 2048 << 20
 
 
 def enable_shm_postings_cache(dir_path: str | None) -> None:
@@ -207,8 +206,7 @@ def _shm_put(gkey: tuple, arrays: tuple) -> None:
 #: overhead only amortizes on big lists (measured: at ~19k postings/
 #: segment the loop is ~1.5x slower; the crossover sits around 64k).
 #: Cluster-scale segments (millions of docs) sail past this and prune.
-EXHAUSTIVE_POSTINGS = int(_os.environ.get("HAYOO_WAND_MIN_POSTINGS",
-                                          str(1 << 16)))
+EXHAUSTIVE_POSTINGS = 1 << 16
 
 
 def _isect_sorted(a: np.ndarray, b: np.ndarray,

@@ -47,23 +47,6 @@ def test_filter_branch_queries_spark(engine, oracle_ix, q):
     _check(engine, oracle_ix, q["query"], q["k"], q["page"], "spark")
 
 
-def test_distributed_dictionary_parity(spark, engine, oracle_ix):
-    """Web-scale path: above DICT_CACHE_BYTES the term dictionary stays
-    distributed (no driver cache) — prefix/fuzzy expansion, idf lookup,
-    and autocomplete must return identical results through the Spark
-    dictionary scans."""
-    from hayoo_spark.query.engine import SearchEngine
-
-    big = SearchEngine(spark, engine.index_dir, dict_cache_bytes=0)
-    assert big._dict is None
-    for q in ["bib*", "baba~", "baba AND bibaba", "nibaba OR lang:de"]:
-        got = big.search(q, k=10)
-        want = oracle.search(oracle_ix, q, k=10)
-        assert [u for u, _ in got] == [u for u, _ in want], q
-    assert big.autocomplete("bi", n=8) == oracle.autocomplete(
-        oracle_ix, "bi", n=8)
-
-
 def test_point_lookup_by_url(engine, oracle_ix):
     """Q13: exact-key point lookup (url: filter, k=1) in both modes."""
     url = oracle_ix.urls[17]

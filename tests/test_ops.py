@@ -830,6 +830,12 @@ def test_semantic_dedup_within_cell_only(spark, emb_df):
     assert {(r["id_a"], r["id_b"]) for r in pairs} <= glob
 
 
+def test_dedup_clusters_empty_pairs(spark):
+    """No near-duplicate pairs: no clusters, on the driver path."""
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert dedup.dedup_clusters(pairs).collect() == []
+
+
 def test_dedup_clusters_driver_vs_distributed_identical(spark):
     """The size-gated driver union-find (r7) and the distributed
     min-label fixpoint must produce the identical clustering: chains,

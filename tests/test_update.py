@@ -91,6 +91,33 @@ def test_distributed_relation_invalidated_on_update(spark, tmp_path):
             spark.conf.set(k, v)    # the suite session keeps build conf
 
 
+def test_open_engine_reloads_after_in_place_update(spark, tmp_path):
+    """An engine kept open across an in-place update must serve the
+    updated index: n_docs, idf, the dictionary and its fuzzy deletion
+    maps all come from the new files, as in a freshly opened engine."""
+    base, delta, full = _updated_corpus(80)
+    p0 = tmp_path / "pages_v0.parquet"
+    p1 = tmp_path / "pages_v1.parquet"
+    base.to_parquet(p0, index=False)
+    full.to_parquet(p1, index=False)
+    inc = str(tmp_path / "inc")
+    build_index(spark, str(p0), inc, n_segments=4, salt_df_threshold=64)
+    eng = SearchEngine(spark, inc)
+    n0 = eng.n_docs
+    queries = ["freshterm", "baba", "freshtern~", "bib*"]
+    before = {q: eng.search(q, k=20) for q in queries}  # fills the caches
+    assert before["freshterm"] == [] and before["freshtern~"] == []
+    update_index(spark, str(p1), inc, since_ts="2025-01-01",
+                 salt_df_threshold=64)
+    fresh = SearchEngine(spark, inc)
+    assert fresh.n_docs > n0  # three new pages
+    for q in queries:
+        assert eng.search(q, k=20) == fresh.search(q, k=20), q
+    assert eng.n_docs == fresh.n_docs
+    assert eng.search("freshtern~", k=20)
+    assert eng.autocomplete("fresh") == fresh.autocomplete("fresh")
+
+
 def test_streaming_ingest(spark, tmp_path):
     base, delta, full = _updated_corpus()
     pages_dir = str(tmp_path / "pages")
