@@ -31,7 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (IntegralType, LongType, StructField,
+                               StructType)
 
 from ..analysis import tokens_col
 
@@ -420,7 +421,9 @@ def dedup_clusters(pairs: DataFrame, key_a: str = "id_a",
     because the distributed fixpoint pays multiple shuffle rounds of
     pure latency on data one machine folds in milliseconds.  Above the
     bound, the distributed path below runs unchanged.  Both produce
-    the identical fixpoint (tested).
+    the identical fixpoint (tested).  The driver path holds ids as
+    int64, so pairs keyed by anything but integers (url strings, say)
+    always take the distributed path, whatever their count.
 
     Distributed shape: iterative min-label propagation — label(v)
     starts at v and each round takes the min over neighbors' labels;
@@ -438,7 +441,9 @@ def dedup_clusters(pairs: DataFrame, key_a: str = "id_a",
     except Exception:
         ep.unpersist()
         raise
-    if n_edges <= DEDUP_CC_DRIVER_MAX_EDGES:
+    integral = all(isinstance(f.dataType, IntegralType)
+                   for f in ep.schema.fields)
+    if integral and n_edges <= DEDUP_CC_DRIVER_MAX_EDGES:
         try:
             return _dedup_clusters_driver(ep.sparkSession, ep)
         finally:

@@ -44,8 +44,7 @@ from . import plan as P
 from .parser import parse
 from .wand import (
     SegmentData, SegmentEvaluator, _flat_terms, _flat_with_not,
-    docs_loaded, enable_shm_postings_cache, ensure_docs_cache_capacity,
-    load_segment_docs,
+    docs_loaded, ensure_docs_cache_capacity, load_segment_docs,
 )
 
 RESULT_SCHEMA = StructType([
@@ -90,21 +89,6 @@ class SearchEngine:
         # unsharded top-k.
         self._sharded = segments is not None
         self._shard = None if segments is None else {int(s) for s in segments}
-        # per-host shared decode cache for the grouped-map path (see
-        # wand.enable_shm_postings_cache); settable to "" to disable
-        shm_root = os.environ.get("HAYOO_SHM_CACHE", "/dev/shm")
-        # per-uid dir, created 0700 + ownership-verified in
-        # enable_shm_postings_cache (ADVICE r6: a world-shared fixed
-        # path lets another local user plant poisoned posting arrays)
-        self._shm_cache_dir = (
-            os.path.join(shm_root, f"hayoo_decode_cache.{os.getuid()}")
-            if shm_root and os.path.isdir(shm_root) else None)
-        # the DRIVER joins the host cache too: warm()'s prewarm then
-        # publishes its decodes, so grouped-map workers mmap the Zipf
-        # head instead of stampeding the postings parquet 32-wide on
-        # the first heavy phrase (and a restarted serving process
-        # re-warms from tmpfs in milliseconds)
-        enable_shm_postings_cache(self._shm_cache_dir)
         # serving-tier raw-rows cache: (field, term) -> {segment: [row]}
         # (LRU by encoded bytes; emptied by every _load)
         self._rows_mem: dict[tuple[str, str], dict[int, list]] = {}
@@ -198,6 +182,19 @@ class SearchEngine:
         # the process-wide docs cache must hold this engine's whole
         # segment set or every warm query re-reads the evicted tables
         ensure_docs_cache_capacity(len(self._segments))
+        # per-segment key of the decoded-postings cache
+        # (wand._POSTINGS_CACHE), taken from the stamp this load
+        # answers: the postings dir's mtime (0 for a segment with no
+        # postings dir) changes when an update rebuilds the segment,
+        # and avgdl changes when an update to OTHER segments shifts it,
+        # which salted-term merges bake into rebuilt block bounds
+        # (ADVICE r1)
+        post_root = os.path.join(index_dir, "postings")
+        post_mt = {int(n.split("=", 1)[1]): mt for n, mt in stamp
+                   if n.startswith("segment=")}
+        avgdl_key = tuple(sorted(self.avgdl.items()))
+        self._seg_keys = {s: (post_root, s, post_mt.get(s, 0), avgdl_key)
+                          for s in self._segments}
         self._rows_mem.clear()
         self._rows_mem_bytes = 0
         self._stamp = stamp
@@ -409,9 +406,9 @@ class SearchEngine:
         # position streams are ~5x the rest of the row and most queries
         # never touch them; shipping them JVM→Arrow→python on EVERY
         # query aged the session into GC stalls at 10M.  Workers that
-        # do need positions (phrases) serve them from the per-host
-        # decode cache, else re-read just their (segment, term) from
-        # parquet once per process (SegmentData._rows_with_positions).
+        # do need positions (phrases) serve them from their own decoded
+        # cache, else re-read just their (segment, term) from parquet
+        # once per process (SegmentData._rows_with_positions).
         post = post.drop("pos_vb", "block_pos_off")
         if self._sharded:
             # a sharded engine serves ONLY its segment slice in every
@@ -424,10 +421,8 @@ class SearchEngine:
         weights, default_fields = self.field_weights, self.default_fields
         date_fields = self.date_fields
         docs_root = os.path.join(self.index_dir, "docs")
-        post_root = os.path.join(self.index_dir, "postings")
-        avgdl_key = tuple(sorted(self.avgdl.items()))
+        seg_keys = self._seg_keys
         n_segments = len(self._segments)
-        shm_cache = self._shm_cache_dir
         flat, flat_not = _flat_with_not(ast, self.field_weights)
         # a bare phrase is segment-prunable like a flat query (every
         # term must be present) and has its own bound-ordered evaluator
@@ -453,20 +448,12 @@ class SearchEngine:
             # default — at 128 segments every warm query would re-read
             # half the doc tables (the a3fd564 lesson, worker edition)
             ensure_docs_cache_capacity(n_segments)
-            # all workers on this host share one decode cache: task→
-            # worker assignment is not sticky, so per-process caches
-            # alone re-decode on most touches (see wand.py)
-            enable_shm_postings_cache(shm_cache)
             docs_pdf = load_segment_docs(docs_root, seg)
-            # same cross-query decoded-postings cache key as the local
-            # serving tier: python workers are reused across queries,
-            # so a worker that re-sees a (segment, term) skips varbyte
-            # decode + salt merge entirely (per-worker LRU; the mtime
-            # component invalidates on incremental update)
-            pdir = f"{post_root}/segment={seg}"
-            mt = os.path.getmtime(pdir) if os.path.exists(pdir) else 0.0
-            sd = SegmentData(pdf, docs_pdf,
-                             cache_key=(post_root, seg, mt, avgdl_key))
+            # the driver's cache key (see _load): python workers are
+            # reused across queries, so a worker that re-sees a
+            # (segment, term) skips varbyte decode + salt merge
+            # entirely (per-worker LRU)
+            sd = SegmentData(pdf, docs_pdf, cache_key=seg_keys[seg])
             sd._avgdl = avgdl
             ev = SegmentEvaluator(sd, idf_map, avgdl, ub_scale,
                                   weights, default_fields, date_fields)
@@ -712,16 +699,12 @@ class SearchEngine:
         from concurrent.futures import ThreadPoolExecutor
 
         docs_root = os.path.join(self.index_dir, "docs")
-        post_root = os.path.join(self.index_dir, "postings")
-        avgdl_key = tuple(sorted(self.avgdl.items()))
+        seg_keys = self._seg_keys
 
         def one(seg: int) -> None:
             raw = seg_rows[seg]
             docs_pdf = load_segment_docs(docs_root, seg)
-            pdir = os.path.join(post_root, f"segment={seg}")
-            mt = os.path.getmtime(pdir) if os.path.exists(pdir) else 0.0
-            sd = SegmentData(None, docs_pdf,
-                             cache_key=(post_root, seg, mt, avgdl_key),
+            sd = SegmentData(None, docs_pdf, cache_key=seg_keys[seg],
                              raw=raw)
             sd._avgdl = self.avgdl  # salted merges rebuild block bounds
             for f, t in raw:
@@ -814,7 +797,7 @@ class SearchEngine:
         else:
             segs = self._segments
 
-        post_root = os.path.join(self.index_dir, "postings")
+        seg_keys = self._seg_keys
 
         def one_segment(seg):
             raw = seg_rows.get(seg)
@@ -823,19 +806,7 @@ class SearchEngine:
                     return None
                 raw = {}
             docs_pdf = load_segment_docs(docs_root, seg)
-            # mtime in the cache key invalidates decoded postings when a
-            # segment is rebuilt by an incremental update (a segment
-            # whose docs all tokenized empty has no postings dir at all)
-            pdir = os.path.join(post_root, f"segment={seg}")
-            mt = os.path.getmtime(pdir) if os.path.exists(pdir) else 0.0
-            # avgdl in the key: salted-term merges rebuild block bounds
-            # under the CURRENT avgdl — an incremental update to OTHER
-            # segments shifts global avgdl without touching this
-            # segment's mtime, and stale lower bounds would make pruning
-            # inadmissible in a long-lived process (ADVICE r1)
-            avgdl_key = tuple(sorted(self.avgdl.items()))
-            sd = SegmentData(None, docs_pdf,
-                             cache_key=(post_root, seg, mt, avgdl_key),
+            sd = SegmentData(None, docs_pdf, cache_key=seg_keys[seg],
                              raw=raw)
             ev = SegmentEvaluator(sd, idf_map, self.avgdl, self.ub_scale,
                                   self.field_weights, self.default_fields,

@@ -1,10 +1,16 @@
 """Per-segment DAAT evaluator with block-max pruning — the query core.
 
-Runs inside an Arrow grouped-map UDF, one invocation per index segment
-(SURVEY.md §3.1 Spark equivalent).  The driver ships the query AST, the
-per-term idf map (global stats), and the top-m budget; the evaluator
-decodes the segment's posting lists, evaluates document-at-a-time, and
-emits the segment-local top-m, which Spark then merges globally.
+Runs once per index segment: on the driver in local mode, or inside an
+Arrow grouped-map UDF in spark mode (SURVEY.md §3.1 Spark equivalent).
+The driver ships the query AST, the per-term idf map (global stats),
+and the top-m budget; the evaluator decodes the segment's posting
+lists, evaluates document-at-a-time, and emits the segment-local top-m,
+which is then merged globally.
+
+Decoded posting lists and prepared doc tables are cached in process
+memory only (``_POSTINGS_CACHE``, ``_DOCS_CACHE``), as Hunt serves from
+indexes held in its own memory: each process, spark-mode python workers
+included, decodes into its own LRU and shares nothing with the others.
 
 Block-max pruning (the north rule's WAND requirement, vectorized):
 posting blocks carry exact per-block upper bounds ``idf * max_tf_norm``
@@ -29,7 +35,6 @@ from ..index import codec
 from . import plan as P
 
 
-import glob as _glob
 import os as _os
 import threading
 
@@ -51,154 +56,41 @@ def ensure_docs_cache_capacity(n_segments: int) -> None:
     with _DOCS_CACHE_LOCK:
         _DOCS_CACHE_MAX = max(_DOCS_CACHE_MAX, int(n_segments) + 8)
 
-# decoded posting lists survive across queries (hot query terms):
-# key = (postings_root, segment, term) -> (ids, tfs, block_last, block_ub)
+# decoded posting lists survive across queries (hot query terms), in
+# this process only: key = SegmentData cache key + (field, term) or
+# ("posflat", field, term) -> tuple of read-only arrays.  LRU over the
+# insertion-ordered dict: a hit moves its key to the back, eviction
+# pops the front.
 _POSTINGS_CACHE: dict[tuple, tuple] = {}
 _POSTINGS_CACHE_MAX = 8192
 _POSTINGS_CACHE_LOCK = threading.Lock()
 
-# ---- shared per-HOST decode cache (distributed mode) ----------------
-# In grouped-map serving, Spark assigns a segment's task to whichever
-# python worker is free, so each worker's in-process _POSTINGS_CACHE
-# only hits when that worker happens to re-see the same (segment, term)
-# — measured hit rate ~10-20% on local[32] at 10M docs, i.e. most
-# queries re-paid the varbyte decode.  Workers on one host therefore
-# SHARE decoded arrays through tmpfs files: the first decoder of a
-# (segment, term) publishes the numpy arrays (atomic tmp+rename), every
-# other worker's miss turns into a page-cache-backed np.load (~ms).
-# The cache key embeds the postings dir mtime, so incremental updates
-# simply stop matching old files (no cross-process invalidation
-# protocol needed); writes stop when tmpfs free space drops below the
-# floor.  On a real cluster this is a per-executor-host cache tier —
-# exactly the thing a serving fleet provisions next to the JVM.
-_SHM_CACHE_DIR: str | None = None
-_SHM_FREE_FLOOR = 2048 << 20
+
+def _decoded_get(gkey: tuple) -> tuple | None:
+    """The cached decode for ``gkey`` (touched as most recent), or None."""
+    with _POSTINGS_CACHE_LOCK:
+        hit = _POSTINGS_CACHE.pop(gkey, None)
+        if hit is not None:
+            _POSTINGS_CACHE[gkey] = hit
+    return hit
 
 
-def enable_shm_postings_cache(dir_path: str | None) -> None:
-    """Turn on the shared decode cache for this process (idempotent;
-    called inside the grouped-map closure so every executor worker
-    joins the same per-host cache).
-
-    The directory is created 0700 and must be OWNED by this uid
-    (ADVICE r6): a world-shared fixed path lets another local user
-    pre-create it and plant poisoned posting arrays.  Callers pass a
-    per-uid path (engine.py appends ``.<uid>``); if an existing dir
-    belongs to someone else the cache silently disables."""
-    global _SHM_CACHE_DIR
-    if not dir_path:
-        return
-    try:
-        _os.makedirs(dir_path, mode=0o700, exist_ok=True)
-        st = _os.stat(dir_path)
-        if st.st_uid != _os.getuid():
-            return
-    except OSError:
-        return
-    _SHM_CACHE_DIR = dir_path
+def _decoded_put(gkey: tuple, out: tuple) -> None:
+    """Cache a decode, evicting the least recently used entry at the cap."""
+    with _POSTINGS_CACHE_LOCK:
+        if len(_POSTINGS_CACHE) >= _POSTINGS_CACHE_MAX:
+            _POSTINGS_CACHE.pop(next(iter(_POSTINGS_CACHE)))
+        _POSTINGS_CACHE[gkey] = out
 
 
-def _shm_evict(needed: int) -> bool:
-    """Best-effort eviction when the tmpfs floor is breached (ADVICE
-    r6: entries are keyed by postings-dir mtime, so stale files from
-    updated/temporary indexes pin host RAM forever otherwise).  Unlinks
-    oldest-atime files first until ``needed`` bytes are reclaimed or
-    the scan budget runs out; concurrent unlinks are harmless (ENOENT
-    ignored).  Returns True if enough space was reclaimed."""
-    try:
-        entries = []
-        with _os.scandir(_SHM_CACHE_DIR) as it:
-            for de in it:
-                if not de.name.endswith((".bin", ".tmp")):
-                    continue
-                try:
-                    st = de.stat()
-                except OSError:
-                    continue
-                entries.append((st.st_atime, st.st_size, de.path))
-        entries.sort()
-        freed = 0
-        for _, size, path in entries:
-            if freed >= needed:
-                break
-            try:
-                _os.unlink(path)
-                freed += size
-            except OSError:
-                pass
-        return freed >= needed
-    except OSError:
-        return False
+def _shm_get(gkey: tuple) -> None:
+    """Always None; nothing in the program calls it.  Decoded postings
+    live only in this process's ``_POSTINGS_CACHE``.  Kept only because
+    the benchmark's tracer (perfbench/spans.py) wraps this name to
+    classify postings lookups, until that tracer reads in-program
+    counters instead (ROADMAP direction 4)."""
+    return None
 
-
-def _shm_path(gkey: tuple) -> str | None:
-    if _SHM_CACHE_DIR is None:
-        return None
-    import hashlib
-    h = hashlib.sha1(repr(gkey).encode()).hexdigest()
-    return _os.path.join(_SHM_CACHE_DIR, h + ".bin")
-
-
-# File format: <u32 header-len><header: repr of [(dtype, shape), ...]>
-# <raw array bytes, concatenated>.  NOT npz — np.load on a zip
-# container pays python-side chunked reads + CRC32 per member
-# (measured 93 ms solo for a 12 MB position stream, ~1 s under
-# 32-worker concurrency).  Raw bytes are served via mmap instead:
-# every worker's arrays are read-only views into the SAME tmpfs
-# pages — zero copy, zero checksum, one physical copy per host.
-# Decoded tuples are already shared immutably across queries via
-# _POSTINGS_CACHE, so read-only views are safe by the same contract.
-
-
-def _shm_get(gkey: tuple) -> tuple | None:
-    path = _shm_path(gkey)
-    if path is None or not _os.path.exists(path):
-        return None
-    try:
-        import ast as _ast
-        import mmap as _mmap
-        import struct as _struct
-        with open(path, "rb") as fh:
-            mm = _mmap.mmap(fh.fileno(), 0, access=_mmap.ACCESS_READ)
-        (hlen,) = _struct.unpack_from("<I", mm, 0)
-        metas = _ast.literal_eval(mm[4:4 + hlen].decode())
-        out, off = [], 4 + hlen
-        for dtype, shape in metas:
-            dt = np.dtype(dtype)
-            n = int(np.prod(shape)) if shape else 1
-            a = np.frombuffer(mm, dt, count=n, offset=off).reshape(shape)
-            out.append(a)
-            off += n * dt.itemsize
-        return tuple(out)
-    except Exception:
-        return None  # torn/corrupt file: fall back to decode
-
-
-def _shm_put(gkey: tuple, arrays: tuple) -> None:
-    path = _shm_path(gkey)
-    if path is None or _os.path.exists(path):
-        return
-    try:
-        arrays = tuple(np.ascontiguousarray(a) for a in arrays)
-        nbytes = sum(a.nbytes for a in arrays)
-        st = _os.statvfs(_SHM_CACHE_DIR)
-        # account the incoming bytes against the floor, and on breach
-        # try to reclaim stale entries before giving up (ADVICE r6)
-        if st.f_bavail * st.f_frsize < _SHM_FREE_FLOOR + nbytes:
-            if not _shm_evict(_SHM_FREE_FLOOR + nbytes
-                              - st.f_bavail * st.f_frsize):
-                return  # tmpfs is box memory: never squeeze it
-        hdr = repr([(a.dtype.str, a.shape) for a in arrays]).encode()
-        import struct as _struct
-        tmp = f"{path}.{_os.getpid()}.tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(_struct.pack("<I", len(hdr)))
-            fh.write(hdr)
-            for a in arrays:
-                fh.write(a.tobytes())
-        _os.replace(tmp, path)
-    except OSError:
-        pass
 
 #: cost-based router floor (r5): below this many candidate postings in
 #: a segment, one vectorized exhaustive pass + partial-select cut beats
@@ -390,8 +282,9 @@ def docs_loaded(docs_root: str, segment: int) -> bool:
 
 def load_segment_docs(docs_root: str, segment: int) -> SegmentDocs:
     """Read one segment's doc table (norms + metadata) via pyarrow,
-    prepared and cached per process — python workers are reused across
-    queries, so repeated searches skip both read and sort."""
+    prepared and cached in this process's ``_DOCS_CACHE`` LRU — python
+    workers are reused across queries, so repeated searches skip both
+    read and sort."""
     import pyarrow.parquet as pq
 
     path = f"{docs_root}/segment={segment}"
@@ -407,36 +300,8 @@ def load_segment_docs(docs_root: str, segment: int) -> SegmentDocs:
     if hit is not None:
         return hit
     # read every stored column: dl_* norms, boost, and any declared
-    # date-context columns all live in the doc table.  When the shared
-    # host cache is on, the first loader publishes the table as an
-    # UNCOMPRESSED Arrow IPC file: every other worker's miss becomes a
-    # memory-map (strings included — no parquet decode, no copies),
-    # which is what keeps 32 workers × 128 segments of cache misses
-    # from dominating grouped-map serving (the 10M profile: 79% of
-    # worker time was this function).
-    tb = None
-    fkey = ("docs-ipc", path, key[1])
-    fpath = _shm_path(fkey)
-    if fpath is not None:
-        fpath = fpath[:-4] + ".arrow"
-        if _os.path.exists(fpath):
-            try:
-                import pyarrow.feather as _pf
-                tb = _pf.read_table(fpath, memory_map=True)
-            except Exception:
-                tb = None  # torn file: fall back to parquet
-    if tb is None:
-        tb = pq.read_table(path)
-        if fpath is not None and not _os.path.exists(fpath):
-            try:
-                st = _os.statvfs(_SHM_CACHE_DIR)
-                if st.f_bavail * st.f_frsize >= _SHM_FREE_FLOOR:
-                    import pyarrow.feather as _pf
-                    tmp = f"{fpath}.{_os.getpid()}.tmp"
-                    _pf.write_feather(tb, tmp, compression="uncompressed")
-                    _os.replace(tmp, fpath)
-            except OSError:
-                pass
+    # date-context columns all live in the doc table
+    tb = pq.read_table(path)
     sd = SegmentDocs(tb)
     with _DOCS_CACHE_LOCK:
         if len(_DOCS_CACHE) >= _DOCS_CACHE_MAX:
@@ -448,8 +313,10 @@ def load_segment_docs(docs_root: str, segment: int) -> SegmentDocs:
 class SegmentData:
     """Decoded view of one segment: postings per term + doc metadata.
 
-    ``cache_key`` (index root, segment) enables the cross-query decoded
-    postings cache — hot terms skip varbyte decode + salt merge."""
+    ``cache_key`` (postings root, segment, postings-dir mtime, avgdl
+    items; SearchEngine._load builds it) enables the cross-query
+    decoded postings cache — hot terms skip varbyte decode + salt
+    merge."""
 
     def __init__(self, postings_pdf: pd.DataFrame | None, docs,
                  cache_key: tuple | None = None,
@@ -503,31 +370,17 @@ class SegmentData:
         """(doc_ids int64 sorted, tfs int64, block_last, block_ub) —
         salted sub-lists merged (disjoint doc sets -> concat + sort).
 
-        Returned arrays are READ-ONLY: shm hits are mmap-backed views
-        and decode-path arrays are frozen before caching, so the
-        immutability contract is uniform across hit/miss (ADVICE r6 —
-        an in-place mutation would otherwise work on a miss and raise
-        only on an shm hit, an environment-dependent failure)."""
+        Returned arrays are READ-ONLY: they are frozen before caching
+        and shared by every later query through ``_POSTINGS_CACHE``, so
+        an in-place mutation raises instead of corrupting a hit."""
         tkey = (field, term)
         if tkey in self._decoded:
             return self._decoded[tkey]
         gkey = self._cache_key + tkey if self._cache_key else None
-        if gkey:
-            with _POSTINGS_CACHE_LOCK:
-                hit = _POSTINGS_CACHE.get(gkey)
-                if hit is not None:  # LRU touch (see load_segment_docs)
-                    _POSTINGS_CACHE[gkey] = _POSTINGS_CACHE.pop(gkey)
-            if hit is not None:
-                self._decoded[tkey] = hit
-                return hit
-            shm = _shm_get(gkey)
-            if shm is not None:
-                self._decoded[tkey] = shm
-                with _POSTINGS_CACHE_LOCK:
-                    if len(_POSTINGS_CACHE) >= _POSTINGS_CACHE_MAX:
-                        _POSTINGS_CACHE.pop(next(iter(_POSTINGS_CACHE)))
-                    _POSTINGS_CACHE[gkey] = shm
-                return shm
+        hit = _decoded_get(gkey) if gkey else None
+        if hit is not None:
+            self._decoded[tkey] = hit
+            return hit
         rows = self._raw.get(tkey)
         if not rows:
             out = (np.zeros(0, np.int64), np.zeros(0, np.int64),
@@ -556,14 +409,10 @@ class SegmentData:
                                            self._avgdl[field])
             out = (ids, tfs, blast, bub)
         for a in out:
-            a.flags.writeable = False  # uniform immutability (ADVICE r6)
+            a.flags.writeable = False  # shared across queries (ADVICE r6)
         self._decoded[tkey] = out
         if gkey:
-            with _POSTINGS_CACHE_LOCK:
-                if len(_POSTINGS_CACHE) >= _POSTINGS_CACHE_MAX:
-                    _POSTINGS_CACHE.pop(next(iter(_POSTINGS_CACHE)))
-                _POSTINGS_CACHE[gkey] = out
-            _shm_put(gkey, out)
+            _decoded_put(gkey, out)
         return out
 
     def _rows_with_positions(self, field: str, term: str) -> list:
@@ -621,22 +470,10 @@ class SegmentData:
         if key in self._decoded:
             return self._decoded[key]
         gkey = self._cache_key + key if self._cache_key else None
-        if gkey:
-            with _POSTINGS_CACHE_LOCK:
-                hit = _POSTINGS_CACHE.get(gkey)
-                if hit is not None:  # LRU touch (see load_segment_docs)
-                    _POSTINGS_CACHE[gkey] = _POSTINGS_CACHE.pop(gkey)
-            if hit is not None:
-                self._decoded[key] = hit
-                return hit
-            shm = _shm_get(gkey)
-            if shm is not None:
-                self._decoded[key] = shm
-                with _POSTINGS_CACHE_LOCK:
-                    if len(_POSTINGS_CACHE) >= _POSTINGS_CACHE_MAX:
-                        _POSTINGS_CACHE.pop(next(iter(_POSTINGS_CACHE)))
-                    _POSTINGS_CACHE[gkey] = shm
-                return shm
+        hit = _decoded_get(gkey) if gkey else None
+        if hit is not None:
+            self._decoded[key] = hit
+            return hit
         id_parts, tf_parts, pos_parts = [], [], []
         for ids, flat, offs in self._pos_index(field, term):
             if len(flat) == 0:
@@ -663,14 +500,10 @@ class SegmentData:
             out = (np.zeros(0, np.int64), np.zeros(1, np.int64),
                    np.zeros(0, np.int64))
         for a in out:
-            a.flags.writeable = False  # uniform immutability (ADVICE r6)
+            a.flags.writeable = False  # shared across queries (ADVICE r6)
         self._decoded[key] = out
         if gkey:
-            with _POSTINGS_CACHE_LOCK:
-                if len(_POSTINGS_CACHE) >= _POSTINGS_CACHE_MAX:
-                    _POSTINGS_CACHE.pop(next(iter(_POSTINGS_CACHE)))
-                _POSTINGS_CACHE[gkey] = out
-            _shm_put(gkey, out)
+            _decoded_put(gkey, out)
         return out
 
     def _raw_postings(self, field: str, term: str):
@@ -720,7 +553,7 @@ class SegmentData:
         fkey = ("posflat", field, term)
         if fkey in self._decoded or (
                 self._cache_key
-                and (self._cache_key + fkey) in _POSTINGS_CACHE):
+                and _decoded_get(self._cache_key + fkey) is not None):
             return self._filter_flat(field, term, cand)
         # strategy choice: selective block slicing pays off only when
         # candidates touch a minority of blocks in every sub-list;

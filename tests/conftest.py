@@ -2,38 +2,12 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from hayoo_spark import fixtures, oracle
 from hayoo_spark.session import get_spark
 
 N_DOCS = 400  # sf_tiny-ish; keeps the whole suite fast
-
-
-@pytest.fixture(scope="session", autouse=True)
-def _decode_cache_cleanup():
-    """Remove the tmpfs decode-cache files this session adds.  Their
-    keys embed the index path, so every temporary index the tests build
-    leaves decodes that no later run reads; files that were there
-    before the session are kept."""
-    root = os.environ.get("HAYOO_SHM_CACHE", "/dev/shm")
-    cache = os.path.join(root, f"hayoo_decode_cache.{os.getuid()}")
-
-    def listing() -> set[str]:
-        try:
-            return set(os.listdir(cache))
-        except OSError:
-            return set()
-
-    before = listing()
-    yield
-    for name in listing() - before:
-        try:
-            os.unlink(os.path.join(cache, name))
-        except OSError:
-            pass
 
 
 @pytest.fixture(scope="session")

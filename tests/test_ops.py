@@ -836,6 +836,19 @@ def test_dedup_clusters_empty_pairs(spark):
     assert dedup.dedup_clusters(pairs).collect() == []
 
 
+def test_dedup_clusters_string_keys(spark):
+    """String ids (urls) cluster like integer ids: a few pairs, well
+    under the driver path's edge bound, which holds ids as int64."""
+    pairs = spark.createDataFrame(
+        [("u/b", "u/a"), ("u/b", "u/c"), ("u/x", "u/y")],
+        "id_a string, id_b string")
+    got = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
+           for r in dedup.dedup_clusters(pairs).collect()}
+    assert got == {"u/a": ("u/a", 1), "u/b": ("u/a", 0),
+                   "u/c": ("u/a", 0),
+                   "u/x": ("u/x", 1), "u/y": ("u/x", 0)}
+
+
 def test_dedup_clusters_driver_vs_distributed_identical(spark):
     """The size-gated driver union-find (r7) and the distributed
     min-label fixpoint must produce the identical clustering: chains,

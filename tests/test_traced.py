@@ -30,5 +30,14 @@ def test_traced_engine_records_layer_spans(spark, index_dir):
         assert {"engine.open", "engine.expand", "engine.fetch",
                 "wand.postings", "wand.eval"} <= names, names
         assert isinstance(eng._rows_mem_bytes, int)
+        # every postings lookup lands in exactly one class; decoded
+        # postings live only in process memory, so no lookup is
+        # served from tmpfs files
+        c = tr.counts
+        assert c["wand.postings_calls"] > 0
+        assert (c["wand.postings_memo"] + c["wand.postings_decoded_hit"]
+                + c["wand.postings_shm_hit"] + c["wand.postings_shm_miss"]
+                == c["wand.postings_calls"]), dict(c)
+        assert c["wand.postings_shm_hit"] == 0
     finally:
         T.uninstall(undo)

@@ -290,55 +290,37 @@ def test_docs_cache_capacity_scales_with_segments(tmp_path, monkeypatch):
     assert W.docs_loaded(str(tmp_path), 2)
 
 
-def test_shm_decode_cache_round_trip(tmp_path):
-    """Distributed-mode workers share decoded arrays through a per-host
-    tmpfs cache: a process that never decoded a (segment, term) must be
-    able to serve it from the file published by another process.  The
-    second SegmentData here carries NO raw rows, so a correct answer
-    can only have come from the shm file."""
-    from hayoo_spark.query import wand
+def test_decoded_postings_cache_is_lru_and_read_only(monkeypatch):
+    """Decoded postings live in the process-wide LRU: a later
+    SegmentData with the same cache key and NO raw rows is served the
+    same read-only arrays, and at the cap a hit protects its entry."""
+    from hayoo_spark.query import wand as W
 
+    monkeypatch.setattr(W, "_POSTINGS_CACHE", {})
+    monkeypatch.setattr(W, "_POSTINGS_CACHE_MAX", 2)
     ev, terms = make_segment()
     sd1 = ev.seg
-    key = ("postroot", 0, 123.0, (("text", 100.0),))
-    old_dir = wand._SHM_CACHE_DIR
-    wand.enable_shm_postings_cache(str(tmp_path / "shm"))
-    try:
-        sd1._cache_key = key
-        want_post = sd1.postings("text", terms[1])
-        want_pos = sd1.positions_flat("text", terms[1])
-        assert len(want_post[0]) > 0
-        with wand._POSTINGS_CACHE_LOCK:
-            wand._POSTINGS_CACHE.clear()
-        sd2 = SegmentData(None, sd1._docs._pdf
-                          if hasattr(sd1._docs, "_pdf") else
-                          pd.DataFrame({
-                              "doc_id": np.arange(sd1.n_docs),
-                              "url": sd1.urls, "lang": sd1.langs,
-                              "warc_ts": pd.to_datetime("2024-01-01"),
-                              "dl": sd1.dls["text"]
-                              if isinstance(sd1.dls, dict) else sd1.dls,
-                          }),
-                          cache_key=key)
-        got_post = sd2.postings("text", terms[1])
-        got_pos = sd2.positions_flat("text", terms[1])
-        for a, b in zip(want_post, got_post):
-            np.testing.assert_array_equal(a, b)
-        for a, b in zip(want_pos, got_pos):
-            np.testing.assert_array_equal(a, b)
-        # a term never decoded anywhere stays a miss (empty, from raw)
-        with wand._POSTINGS_CACHE_LOCK:
-            wand._POSTINGS_CACHE.clear()
-        miss = sd2.postings("text", "nosuchterm")
-        assert len(miss[0]) == 0
-    finally:
-        wand._SHM_CACHE_DIR = old_dir
+    key = ("postroot", 0, 123, (("text", 100.0),))
+    sd1._cache_key = key
+    want = sd1.postings("text", terms[1])
+    assert len(want[0]) > 0
+    got = SegmentData(None, sd1._docs, cache_key=key).postings(
+        "text", terms[1])
+    assert all(a is b for a, b in zip(want, got))
+    assert not any(a.flags.writeable for a in got)
+
+    sd1.postings("text", terms[2])
+    # a new view touches terms[1] -> terms[2] is now least recent
+    SegmentData(None, sd1._docs, cache_key=key).postings("text", terms[1])
+    sd1.postings("text", terms[3])
+    assert set(W._POSTINGS_CACHE) == {key + ("text", terms[1]),
+                                      key + ("text", terms[3])}
 
 
 def test_stripped_rows_refetch_positions_from_parquet(tmp_path):
     """Distributed mode ships posting rows WITHOUT pos_vb /
-    block_pos_off.  A worker that needs positions and has no host
-    cache must re-read its (segment, term) from the postings parquet
+    block_pos_off.  A worker that needs positions and has not decoded
+    them yet must re-read its (segment, term) from the postings parquet
     (SegmentData._rows_with_positions) and produce the same position
     stream as a full-row SegmentData."""
     from hayoo_spark.query import wand
@@ -356,22 +338,17 @@ def test_stripped_rows_refetch_positions_from_parquet(tmp_path):
                                              index=False)
     post_root = str(tmp_path / "postings")
     key = (post_root, 0, 1.0, (("text", 100.0),))
-    old_dir = wand._SHM_CACHE_DIR
-    wand._SHM_CACHE_DIR = None  # no host cache: force the refetch
-    try:
-        with wand._POSTINGS_CACHE_LOCK:
-            wand._POSTINGS_CACHE.clear()
-        stripped = pdf.drop(columns=["pos_vb", "segment"])
-        sd = SegmentData(stripped, pd.DataFrame({
-            "doc_id": np.arange(full.n_docs), "url": full.urls,
-            "lang": full.langs, "warc_ts": pd.to_datetime("2024-01-01"),
-            "dl": full.dls["text"],
-        }), cache_key=key)
-        sd._avgdl = {"text": 100.0}
-        for t in terms[:2]:
-            want = full.positions_flat("text", t)
-            got = sd.positions_flat("text", t)
-            for a, b in zip(want, got):
-                np.testing.assert_array_equal(a, b)
-    finally:
-        wand._SHM_CACHE_DIR = old_dir
+    with wand._POSTINGS_CACHE_LOCK:
+        wand._POSTINGS_CACHE.clear()
+    stripped = pdf.drop(columns=["pos_vb", "segment"])
+    sd = SegmentData(stripped, pd.DataFrame({
+        "doc_id": np.arange(full.n_docs), "url": full.urls,
+        "lang": full.langs, "warc_ts": pd.to_datetime("2024-01-01"),
+        "dl": full.dls["text"],
+    }), cache_key=key)
+    sd._avgdl = {"text": 100.0}
+    for t in terms[:2]:
+        want = full.positions_flat("text", t)
+        got = sd.positions_flat("text", t)
+        for a, b in zip(want, got):
+            np.testing.assert_array_equal(a, b)
