@@ -1701,7 +1701,7 @@ top AS (SELECT doc_id, max(c) AS top_bigram_n, sum(c) AS n_bigrams
         FROM cnt GROUP BY doc_id)
 SELECT b.doc_id, b.n_lines, b.dup_lines,
        coalesce(t.top_bigram_n, 0) AS top_bigram_n,
-       coalesce(t.n_bigrams, 0) AS n_bigrams
+       CAST(coalesce(t.n_bigrams, 0) AS BIGINT) AS n_bigrams
 FROM base b LEFT JOIN top t USING (doc_id)"""
     sql["t_url_filter"] = """
 WITH d AS (SELECT doc_id, CASE

@@ -242,24 +242,14 @@ def main():
                 eng.search(q, k=20)
                 reps.append(time.monotonic() - t0)
             warm.append(sorted(reps)[1])
-        # distributed (grouped-map) mode: the cluster fan-out path; one
-        # warm-up pass, then one timed rep (each costs a Spark job)
+        # spark mode: the local evaluation fanned out over executors;
+        # one warm-up pass, then one timed rep (each costs a Spark job)
         dist = []
         for q in ENGINE_QUERIES:
             eng.search(q, k=20, mode="spark")
             t0 = time.monotonic()
             eng.search(q, k=20, mode="spark")
             dist.append(time.monotonic() - t0)
-        # …and with the postings relation persisted in executor memory
-        # (warm(distributed=True) — the cluster analogue of Hunt's
-        # index-in-RAM startup)
-        eng.warm(distributed=True)
-        dist_mem = []
-        for q in ENGINE_QUERIES:
-            eng.search(q, k=20, mode="spark")
-            t0 = time.monotonic()
-            eng.search(q, k=20, mode="spark")
-            dist_mem.append(time.monotonic() - t0)
 
         def pctl(xs, p):
             xs = sorted(xs)
@@ -283,8 +273,6 @@ def main():
             "query_cold_p99_ms": pctl(cold, 0.99),
             "query_spark_p50_ms": pctl(dist, 0.5),
             "query_spark_p99_ms": pctl(dist, 0.99),
-            "query_spark_mem_p50_ms": pctl(dist_mem, 0.5),
-            "query_spark_mem_p99_ms": pctl(dist_mem, 0.99),
             "qps_8thread_warm": qps,
         }
         queries["engine_queries"] = round(sum(cold), 3)

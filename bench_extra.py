@@ -116,7 +116,7 @@ def cmd_stages(name: str):
              .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", S.default_driver_memory())
              .config("spark.ui.enabled", "true")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.sql.autoBroadcastJoinThreshold",

@@ -1,21 +1,23 @@
 """SearchEngine facade: AST -> segment scans -> global top-k.
 
-Two execution modes over the same index layout and the same
-SegmentEvaluator (results are identical; tested):
+One segment evaluator (``evaluate_segment``: read the segment's rows,
+run SegmentEvaluator, keep its local top-m) and one merge
+(``merge_top_m``, a (-score, url) sort), with two drivers over the
+same index layout (results are identical; tested):
 
-- ``spark``: one Arrow grouped-map task per segment — postings read is
-  partition-pruned (parquet pushdown on ``term``), each task emits its
-  local top-m, Spark merges (TakeOrderedAndProject).  The mode for a
-  1000-executor cluster where segments outnumber driver memory.
 - ``local``: the serving-tier path — the driver reads only the needed
-  terms' posting rows per segment via pyarrow and evaluates
-  in-process.  Postings are term-sorted within each segment file, so
-  the term filter could skip row groups, but a segment file stays one
-  row group until it outgrows parquet's row-group size (true of every
-  index the tests and benchmarks build), so there it skips nothing.
-  Single-digit-ms latency, no job-scheduling overhead; the shape a
-  dedicated query node would use against the same Iceberg/parquet
-  segment files.
+  terms' posting rows via pyarrow (through an engine-level rows cache)
+  and evaluates the segments in-process.  Postings are term-sorted
+  within each segment file, so the term filter could skip row groups,
+  but a segment file stays one row group until it outgrows parquet's
+  row-group size (true of every index the tests and benchmarks build),
+  so there it skips nothing.  Single-digit-ms latency, no
+  job-scheduling overhead; the shape a dedicated query node would use
+  against the same Iceberg/parquet segment files.
+- ``spark``: the same evaluation fanned out over executors — one
+  ``mapPartitions`` stage over groups of segments; each task reads its
+  segments' rows with the same reader and yields per-segment top-m,
+  which the driver merges exactly as local mode does.
 
 Both modes expand and score against one term dictionary held on the
 driver, as Hunt holds its context indexes in memory (SURVEY.md §3).
@@ -33,35 +35,108 @@ import bisect
 import glob
 import math
 import os
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from . import plan as P
 from .parser import parse
 from .wand import (
-    SegmentData, SegmentEvaluator, _flat_terms, _flat_with_not,
+    SegmentData, SegmentEvaluator, _flat_with_not,
     docs_loaded, ensure_docs_cache_capacity, load_segment_docs,
 )
-
-RESULT_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("score", DoubleType()),
-])
-
-#: reduce-side task count for distributed serving queries (see
-#: warm(distributed=True)); a real cluster sizes this to executors
-SERVING_SHUFFLE_PARTITIONS = 8
-
 
 #: serving-tier raw-posting-rows cache budget: hot terms' encoded bytes
 #: stay in engine memory so a warm query touches NO parquet at all
 #: (the per-query dataset re-read dominated warm latency, VERDICT r2)
 ROWS_CACHE_BYTES = 512 * 1024 * 1024
 
+
+class SegmentQuery(NamedTuple):
+    """What one segment's evaluation needs from the driver: the plan,
+    the global idf map and corpus stats, and the top-m budget."""
+    ast: P.Node
+    flat: tuple | None  # _flat_with_not's flat form, None if not flat
+    flat_not: P.Node | None  # the AND-NOT right side the flat form excludes
+    idf: dict
+    avgdl: dict
+    ub_scale: dict
+    weights: dict
+    default_fields: tuple
+    date_fields: tuple
+    m: int
+
+    @property
+    def prunable(self) -> bool:
+        """A flat query or a bare phrase needs every segment it scores
+        to hold one of its terms; any other plan may match a segment
+        through a filter-only branch (lang:/url:/range) alone."""
+        return self.flat is not None or isinstance(self.ast, P.Phrase)
+
+
+def read_postings(index_dir: str, pairs, segments=None,
+                  ) -> dict[tuple[str, str], dict[int, list]]:
+    """Raw posting rows for the (field, term) pairs, as {pair: {segment:
+    [row, ...]}} — ONE dataset scan with the term filter pushed down,
+    restricted to ``segments`` when given.  Postings are term-sorted
+    per file, so the filter could skip row groups, but a segment's file
+    is a single row group until it outgrows parquet's row-group size
+    (every index the tests and benchmarks build): there the filter
+    prunes nothing and each read decodes whole files."""
+    import pyarrow.parquet as pq
+    filters = [("term", "in", sorted({t for _, t in pairs})),
+               ("field", "in", sorted({f for f, _ in pairs}))]
+    if segments is not None:
+        filters.append(("segment", "in", list(segments)))
+    tbl = pq.read_table(
+        os.path.join(index_dir, "postings"), filters=filters,
+    ).to_pandas()
+    got: dict[tuple[str, str], dict[int, list]] = {p: {} for p in pairs}
+    if len(tbl):
+        tbl["segment"] = tbl["segment"].astype(int)  # hive col is categorical
+        for row in tbl.itertuples(index=False):
+            ent = got.get((row.field, row.term))
+            if ent is not None:
+                ent.setdefault(int(row.segment), []).append(row)
+    return got
+
+
+def evaluate_segment(q: SegmentQuery, docs_root: str, seg: int,
+                     cache_key: tuple, raw: dict | None):
+    """One segment's top-m as (urls, scores).  ``raw`` holds the
+    segment's rows per (field, term) pair, None when it has none; a
+    prunable query then skips the segment (returns None)."""
+    if raw is None:
+        if q.prunable:
+            return None
+        raw = {}
+    sd = SegmentData(load_segment_docs(docs_root, seg),
+                     cache_key=cache_key, raw=raw)
+    ev = SegmentEvaluator(sd, q.idf, q.avgdl, q.ub_scale, q.weights,
+                          q.default_fields, q.date_fields)
+    if q.flat is not None:
+        kind, leaves, filters, phrases = q.flat
+        ids, sc = ev.top_m_pruned(kind, leaves, q.m, exclude=q.flat_not,
+                                  filters=filters, phrases=phrases)
+    elif isinstance(q.ast, P.Phrase):
+        ids, sc = ev.top_m_phrase(q.ast, q.m)
+    else:
+        ids, sc = ev.evaluate(q.ast)
+        ids, sc = ev._cut(ids, sc, q.m)
+    return sd.url_take(ids), sc
+
+
+def merge_top_m(parts, m: int) -> list[tuple[str, float]]:
+    """Global top-m of per-segment (urls, scores) lists: score
+    descending, ties by url ascending (FIXTURES.md §3)."""
+    urls = np.asarray([u for us, _ in parts for u in us], dtype=object)
+    if not len(urls):
+        return []
+    scores = np.asarray([s for _, ss in parts for s in ss], dtype=np.float64)
+    order = np.lexsort((urls, -scores))[:m]
+    return [(urls[i], float(scores[i])) for i in order]
 
 
 class SearchEngine:
@@ -94,18 +169,6 @@ class SearchEngine:
         self._rows_mem: dict[tuple[str, str], dict[int, list]] = {}
         self._rows_mem_bytes = 0
         self._rows_mem_budget = rows_cache_bytes
-        # ONE analyzed postings relation for distributed-mode queries,
-        # built on first use: a fresh spark.read.parquet per query
-        # re-lists files and re-reads footers — a fixed few-hundred-ms
-        # tax per query that dominates the distributed p50 (VERDICT r3
-        # item 7).  warm(distributed=True) additionally persists it in
-        # executor memory (the cluster analogue of Hunt's index-in-RAM
-        # startup; opt-in because the FULL postings relation only fits
-        # executor memory at bench scales — a real deployment persists
-        # the hot fields/terms projection instead)
-        self._post_df = None
-        self._post_df_persisted = False
-        self._post_df_stamp: tuple | None = None
         # one engine serves concurrent queries (a server's request
         # threads): the LRU, the lazy-built maps and reloads mutate
         # under this lock; reads of immutable loaded rows need none
@@ -116,8 +179,8 @@ class SearchEngine:
         # the GIL (measured: serial 83 qps, 8 free-running threads 12) —
         # queueing them through one gate keeps aggregate throughput at
         # the serial rate while I/O (pyarrow reads, GIL-releasing) still
-        # overlaps outside it.  Scale-out beyond one process is the
-        # distributed mode / more serving processes.
+        # overlaps outside it.  Scale-out beyond one process is spark
+        # mode / more serving processes.
         self._eval_gate = threading.Lock()
         self._stamp: tuple | None = None
         with self._lock:
@@ -385,98 +448,48 @@ class SearchEngine:
             rows = self._search_spark(ast, needed, m)
         return rows[page * k :]
 
-    def _postings_df(self):
-        """The shared distributed postings relation, re-analyzed only
-        after a reload (an incremental update invalidates it)."""
-        with self._lock:
-            if self._post_df_stamp != self._stamp:
-                if self._post_df_persisted:
-                    self._post_df.unpersist()
-                self._post_df = self.spark.read.parquet(
-                    os.path.join(self.index_dir, "postings"))
-                self._post_df_persisted = False
-                self._post_df_stamp = self._stamp
-            return self._post_df
+    def _segment_query(self, ast, needed, m) -> SegmentQuery:
+        flat, flat_not = _flat_with_not(ast, self.field_weights)
+        return SegmentQuery(ast, flat, flat_not, self._idf_map(needed),
+                            self.avgdl, self.ub_scale, self.field_weights,
+                            self.default_fields, self.date_fields, m)
 
     def _search_spark(self, ast, needed, m):
-        terms = list({t for _, t in needed})
-        flds = list({f for f, _ in needed})
-        post = self._postings_df().filter(
-            F.col("term").isin(terms) & F.col("field").isin(flds))
-        # position streams are ~5x the rest of the row and most queries
-        # never touch them; shipping them JVM→Arrow→python on EVERY
-        # query aged the session into GC stalls at 10M.  Workers that
-        # do need positions (phrases) serve them from their own decoded
-        # cache, else re-read just their (segment, term) from parquet
-        # once per process (SegmentData._rows_with_positions).
-        post = post.drop("pos_vb", "block_pos_off")
-        if self._sharded:
-            # a sharded engine serves ONLY its segment slice in every
-            # mode — without this filter spark mode would evaluate the
-            # full corpus and the shard-merge contract (each url from
-            # exactly one shard) would break
-            post = post.filter(F.col("segment").isin(self._segments))
-        idf_map = self._idf_map(needed)
-        avgdl, ub_scale = self.avgdl, self.ub_scale
-        weights, default_fields = self.field_weights, self.default_fields
-        date_fields = self.date_fields
-        docs_root = os.path.join(self.index_dir, "docs")
-        seg_keys = self._seg_keys
+        """The local evaluation fanned out over executors: one
+        ``mapPartitions`` stage over groups of this engine's segments
+        (a shard engine fans out only its slice).  Each task reads its
+        group's rows with ``read_postings`` and yields each segment's
+        top-m; the driver merges them as local mode does.  Python
+        workers are reused across tasks, so their decoded-postings and
+        docs caches (wand) carry over between queries."""
+        q = self._segment_query(ast, needed, m)
+        index_dir, seg_keys = self.index_dir, self._seg_keys
+        docs_root = os.path.join(index_dir, "docs")
+        pairs = sorted(needed)
         n_segments = len(self._segments)
-        flat, flat_not = _flat_with_not(ast, self.field_weights)
-        # a bare phrase is segment-prunable like a flat query (every
-        # term must be present) and has its own bound-ordered evaluator
-        is_phrase = isinstance(ast, P.Phrase)
-        if flat is None and not is_phrase:
-            # non-flat ASTs can hold filter-only branches (lang:/url:/
-            # range) whose matches live in segments holding NONE of the
-            # scoring terms' postings; a groupBy over the term-filtered
-            # postings never forms a group for those segments, silently
-            # dropping their docs (ADVICE r1).  A sentinel row per
-            # segment (null term, filtered out before decode) guarantees
-            # every segment is evaluated, matching local mode.
-            sent = self.spark.createDataFrame(
-                [(s,) for s in self._segments], "segment int")
-            post = post.unionByName(sent, allowMissingColumns=True)
 
-        def eval_segment(key, pdf):
-            seg = int(key[0])
-            pdf = pdf[pdf["term"].notna()]
-            # executor-side caches must be sized to the layout too: the
-            # driver grows its docs cache at engine init, but each
-            # python worker imports wand fresh with the 64-entry
-            # default — at 128 segments every warm query would re-read
-            # half the doc tables (the a3fd564 lesson, worker edition)
+        def run(groups):
+            # each python worker imports wand with the default docs
+            # cache size; grow it to the layout as the driver does
             ensure_docs_cache_capacity(n_segments)
-            docs_pdf = load_segment_docs(docs_root, seg)
-            # the driver's cache key (see _load): python workers are
-            # reused across queries, so a worker that re-sees a
-            # (segment, term) skips varbyte decode + salt merge
-            # entirely (per-worker LRU)
-            sd = SegmentData(pdf, docs_pdf, cache_key=seg_keys[seg])
-            sd._avgdl = avgdl
-            ev = SegmentEvaluator(sd, idf_map, avgdl, ub_scale,
-                                  weights, default_fields, date_fields)
-            if flat is not None:
-                ids, sc = ev.top_m_pruned(flat[0], flat[1], m,
-                                          exclude=flat_not,
-                                          filters=flat[2],
-                                          phrases=flat[3])
-            elif is_phrase:
-                ids, sc = ev.top_m_phrase(ast, m)
-            else:
-                ids, sc = ev.evaluate(ast)
-                ids, sc = ev._cut(ids, sc, m)
-            return pd.DataFrame({"url": sd.url_take(ids), "score": sc})
+            for segs in groups:
+                seg_rows: dict[int, dict] = {}
+                for p, by in read_postings(index_dir, pairs, segs).items():
+                    for seg, rows in by.items():
+                        seg_rows.setdefault(seg, {})[p] = rows
+                for seg in segs:
+                    res = evaluate_segment(q, docs_root, seg, seg_keys[seg],
+                                           seg_rows.get(seg))
+                    if res is not None:
+                        yield res
 
-        top = (
-            post.groupBy("segment")
-            .applyInPandas(eval_segment, RESULT_SCHEMA)
-            .orderBy(F.col("score").desc(), F.col("url"))
-            .limit(m)
-            .collect()
-        )
-        return [(r["url"], r["score"]) for r in top]
+        sc = self.spark.sparkContext
+        n = min(n_segments, sc.defaultParallelism)
+        if n == 0:
+            return []
+        groups = [self._segments[i::n] for i in range(n)]
+        return merge_top_m(
+            sc.parallelize(groups, n).mapPartitions(run).collect(), m)
 
     def _postings_stamp(self) -> tuple:
         """Modification times of the postings segment dirs and of the
@@ -503,30 +516,11 @@ class SearchEngine:
 
     def _read_pairs(self, missing: list[tuple[str, str]],
                     ) -> dict[tuple[str, str], dict[int, list]]:
-        """Parquet read for cache-missing pairs — ONE dataset scan with
-        the term filter pushed down.  Postings are term-sorted per file,
-        so the filter could skip row groups, but a segment's file is a
-        single row group until it outgrows parquet's row-group size
-        (every index the tests and benchmarks build): there the filter
-        prunes nothing and each read decodes whole files.  Called
-        WITHOUT the engine lock held."""
-        import pyarrow.parquet as pq
-        filters = [("term", "in", sorted({t for _, t in missing})),
-                   ("field", "in", sorted({f for f, _ in missing}))]
-        if self._sharded:  # shard engines read only their slice's dirs
-            filters.append(("segment", "in", list(self._segments)))
-        tbl = pq.read_table(
-            os.path.join(self.index_dir, "postings"), filters=filters,
-        ).to_pandas()
-        got: dict[tuple[str, str], dict[int, list]] = \
-            {p: {} for p in missing}
-        if len(tbl):
-            tbl["segment"] = tbl["segment"].astype(int)  # hive col is categorical
-            for row in tbl.itertuples(index=False):
-                ent = got.get((row.field, row.term))
-                if ent is not None:
-                    ent.setdefault(int(row.segment), []).append(row)
-        return got
+        """``read_postings`` for cache-missing pairs (a shard engine
+        reads only its slice's dirs).  Called WITHOUT the engine lock
+        held."""
+        return read_postings(self.index_dir, missing,
+                             self._segments if self._sharded else None)
 
     def _fetch_rows(self, pairs: set[tuple[str, str]]) -> dict[int, dict]:
         """Raw posting rows for the (field, term) pairs, as
@@ -575,15 +569,9 @@ class SearchEngine:
                 seg_rows.setdefault(seg, {})[p] = rows
         return seg_rows
 
-    def warm(self, top_terms: int = 256, distributed: bool = False,
-             positions_top: int = 32,
-             shuffle_partitions: int | None = None) -> int:
+    def warm(self, top_terms: int = 256, positions_top: int = 32) -> int:
         """Preload the raw-rows cache with the highest-df (field, term)
-        pairs over the default search fields.  ``distributed=True``
-        additionally persists the shared postings relation in executor
-        memory and materializes it, moving distributed-mode queries
-        from parquet scans to in-memory columnar filters (min/max
-        pruning on term still applies).
+        pairs over the default search fields.
 
         The reference engine answers every query from an index held
         entirely in RAM (Hunt loads its ContextIndex at startup;
@@ -612,67 +600,6 @@ class SearchEngine:
             self._fetch_rows(pairs)
         if pos_pairs and positions_top:
             self._warm_positions(pos_pairs)
-        if distributed:
-            # serving posture for the session (an explicit opt-in: a
-            # session used for BUILDS wants the opposite settings):
-            # - AQE off: its runtime re-planning adds ~300 ms to these
-            #   small 2-stage jobs (measured on the 30k bench index:
-            #   730 -> 427 ms p50) — AQE pays off on big build
-            #   shuffles, not on latency-critical point queries;
-            # - shuffle partitions sized to the work: at bench scale
-            #   scheduling 32 reduce tasks costs more than evaluating a
-            #   handful of tiny groups serially (427 -> 300 ms at 8);
-            #   at 1M+ docs per-group evaluation dominates scheduling,
-            #   so the grouped-map fan-out wants ~one task per segment
-            #   (8 partitions over 64 big segments serialized 8 groups
-            #   per core and left 3/4 of the box idle).  A real cluster
-            #   sizes this to its executor count.
-            if shuffle_partitions is None:
-                if self.n_docs >= 1_000_000:
-                    par = self.spark.sparkContext.defaultParallelism
-                    shuffle_partitions = min(len(self._segments),
-                                             max(SERVING_SHUFFLE_PARTITIONS,
-                                                 2 * par))
-                else:
-                    shuffle_partitions = SERVING_SHUFFLE_PARTITIONS
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            self.spark.conf.set("spark.sql.shuffle.partitions",
-                                str(shuffle_partitions))
-            # encoded posting buffers are already varbyte-compressed —
-            # columnar-cache compression on top costs a per-query
-            # decompress pass and saves nothing; bigger cached batches
-            # cut per-batch scan overhead (A/B at 10M: the persisted
-            # scan+filter floor 246 -> 125 ms)
-            self.spark.conf.set(
-                "spark.sql.inMemoryColumnarStorage.compressed", "false")
-            self.spark.conf.set(
-                "spark.sql.inMemoryColumnarStorage.batchSize", "65536")
-            with self._lock:
-                if self._post_df_persisted:
-                    self._post_df.unpersist()
-                    self._post_df_persisted = False
-                # position streams stay OUT of the serving cache: no
-                # query ships them (see _search_spark) — excluding them
-                # here makes the persisted relation ~5x smaller and its
-                # warm-time repartition ~5x cheaper
-                base = self.spark.read.parquet(
-                    os.path.join(self.index_dir, "postings")).drop(
-                        "pos_vb", "block_pos_off")
-                # hash-partitioned BY SEGMENT before persisting: the
-                # per-query groupBy("segment") then satisfies its
-                # clustered distribution straight from the cache — no
-                # per-query exchange re-shipping encoded posting
-                # buffers (at 10M the Zipf-head term's buffers are
-                # tens of MB; re-shuffling them every query dominated
-                # spark-mode p50), and cached-partition locality makes
-                # segment→executor assignment sticky, so the
-                # per-worker decoded/docs caches actually hit
-                self._post_df = base.repartition(
-                    max(1, int(shuffle_partitions)), "segment")
-                self._post_df.persist()
-                self._post_df_persisted = True
-                self._post_df_stamp = self._stamp
-            self._post_df.count()  # materialize the cache before serving
         return len(pairs)
 
     def _warm_positions(self, pairs: set[tuple[str, str]]) -> None:
@@ -704,8 +631,7 @@ class SearchEngine:
         def one(seg: int) -> None:
             raw = seg_rows[seg]
             docs_pdf = load_segment_docs(docs_root, seg)
-            sd = SegmentData(None, docs_pdf, cache_key=seg_keys[seg],
-                             raw=raw)
+            sd = SegmentData(docs_pdf, cache_key=seg_keys[seg], raw=raw)
             sd._avgdl = self.avgdl  # salted merges rebuild block bounds
             for f, t in raw:
                 if only is not None and (f, t) not in only:
@@ -777,52 +703,17 @@ class SearchEngine:
 
     def _search_local(self, ast, needed, m):
         """Serving-tier path: cached/pyarrow segment reads on the
-        driver, fanned out over a thread pool (pyarrow releases the
-        GIL; the numpy evaluation is batch work)."""
+        driver, docs loads prefetched on a thread pool (pyarrow
+        releases the GIL), then the segments evaluated serially."""
         from concurrent.futures import ThreadPoolExecutor
 
-        idf_map = self._idf_map(needed)
-        flat, flat_not = _flat_with_not(ast, self.field_weights)
+        q = self._segment_query(ast, needed, m)
         docs_root = os.path.join(self.index_dir, "docs")
-
         seg_rows = self._fetch_rows(set(needed))
         self._prewarm_phrase_positions(ast, seg_rows)
-        is_phrase = isinstance(ast, P.Phrase)
-        prunable = flat is not None or is_phrase
-        if prunable:
-            segs = sorted(seg_rows)
-            if self._sharded:
-                mine = set(self._segments)
-                segs = [s for s in segs if s in mine]
-        else:
-            segs = self._segments
-
-        seg_keys = self._seg_keys
-
-        def one_segment(seg):
-            raw = seg_rows.get(seg)
-            if raw is None:
-                if prunable:
-                    return None
-                raw = {}
-            docs_pdf = load_segment_docs(docs_root, seg)
-            sd = SegmentData(None, docs_pdf, cache_key=seg_keys[seg],
-                             raw=raw)
-            ev = SegmentEvaluator(sd, idf_map, self.avgdl, self.ub_scale,
-                                  self.field_weights, self.default_fields,
-                                  self.date_fields)
-            if flat is not None:
-                ids, sc = ev.top_m_pruned(flat[0], flat[1], m,
-                                          exclude=flat_not,
-                                          filters=flat[2],
-                                          phrases=flat[3])
-            elif is_phrase:
-                ids, sc = ev.top_m_phrase(ast, m)
-            else:
-                ids, sc = ev.evaluate(ast)
-                ids, sc = ev._cut(ids, sc, m)
-            return sd.url_take(ids), sc
-
+        segs = self._segments
+        if q.prunable:
+            segs = [s for s in segs if s in seg_rows]
         # parallelism split: the docs loads are pyarrow parquet reads
         # (GIL-releasing C++) — prefetch those on a pool; the evaluation
         # itself is small-batch numpy that HOLDS the GIL, where threads
@@ -831,27 +722,20 @@ class SearchEngine:
         if len(cold) > 1:
             with ThreadPoolExecutor(max_workers=min(8, len(cold))) as ex:
                 list(ex.map(lambda s: load_segment_docs(docs_root, s), cold))
-        out_urls: list = []
-        out_scores: list = []
         # NOTE (r5, measured): a thread pool over segments is 3x SLOWER
         # even at 47k docs/segment (3M index: serial p50 194 ms vs
         # pooled 634 ms) — the evaluation's numpy calls stay too small
         # to release the GIL long enough, so threads convoy at every
-        # scale tested.  Scale-out of one query's segments is the
-        # distributed mode / segment-sharded serving processes, not
-        # driver threads.
+        # scale tested.  Scale-out of one query's segments is spark
+        # mode / segment-sharded serving processes, not driver threads.
+        parts = []
         with self._eval_gate:
             for seg in segs:
-                res = one_segment(seg)
+                res = evaluate_segment(q, docs_root, seg, self._seg_keys[seg],
+                                       seg_rows.get(seg))
                 if res is not None:
-                    out_urls.extend(res[0])
-                    out_scores.extend(res[1])
-        if not out_urls:
-            return []
-        urls = np.asarray(out_urls, dtype=object)
-        scores = np.asarray(out_scores, dtype=np.float64)
-        order = np.lexsort((urls, -scores))[:m]
-        return [(urls[i], float(scores[i])) for i in order]
+                    parts.append(res)
+        return merge_top_m(parts, m)
 
     # ---------------- stored-field projection (Q12) ----------------
 

@@ -1,11 +1,12 @@
 """Per-segment DAAT evaluator with block-max pruning — the query core.
 
-Runs once per index segment: on the driver in local mode, or inside an
-Arrow grouped-map UDF in spark mode (SURVEY.md §3.1 Spark equivalent).
-The driver ships the query AST, the per-term idf map (global stats),
-and the top-m budget; the evaluator decodes the segment's posting
-lists, evaluates document-at-a-time, and emits the segment-local top-m,
-which is then merged globally.
+Runs once per index segment, through ``engine.evaluate_segment``: on
+the driver in local mode, or inside a fanned-out Spark task in spark
+mode (SURVEY.md §3.1 Spark equivalent).  Either way the caller holds
+the query AST, the per-term idf map (global stats) and the top-m
+budget; the evaluator decodes the segment's posting lists, evaluates
+document-at-a-time, and emits the segment-local top-m, which is then
+merged globally.
 
 Decoded posting lists and prepared doc tables are cached in process
 memory only (``_POSTINGS_CACHE``, ``_DOCS_CACHE``), as Hunt serves from
@@ -20,8 +21,8 @@ interval's bound is the sum of covering blocks' bounds.  Intervals are
 scored best-bound-first and scoring stops as soon as the next bound is
 below the current k-th score (θ) — provably exact, verified ≡
 exhaustive scoring in tests.  This trades the classic pointer-chasing
-WAND loop for batch pruning, which is the right shape inside an Arrow
-UDF (numpy batches, no per-posting Python).
+WAND loop for batch pruning, which is the right shape for Python
+(numpy batches, no per-posting Python).
 
 All scoring is float64; ties broken by url ascending (FIXTURES.md §3).
 """
@@ -318,8 +319,7 @@ class SegmentData:
     decoded postings cache — hot terms skip varbyte decode + salt
     merge."""
 
-    def __init__(self, postings_pdf: pd.DataFrame | None, docs,
-                 cache_key: tuple | None = None,
+    def __init__(self, docs, cache_key: tuple | None = None,
                  raw: dict[tuple[str, str], list] | None = None):
         if isinstance(docs, pd.DataFrame):
             docs = SegmentDocs(docs)
@@ -332,16 +332,8 @@ class SegmentData:
         self.max_boost = docs.max_boost
         self.extra = getattr(docs, "extra", {})
         self._cache_key = cache_key
-        # posting lists are keyed (field, term); a postings frame with
-        # no field column (single-field layout) is keyed field "text".
-        # ``raw`` passes pre-grouped rows directly (the engine's
-        # serving-tier rows cache) — no frame scan at all.
+        # raw posting rows (engine.read_postings), keyed (field, term)
         self._raw: dict[tuple[str, str], list] = dict(raw) if raw else {}
-        if postings_pdf is not None and len(postings_pdf):
-            has_field = "field" in postings_pdf.columns
-            for row in postings_pdf.itertuples(index=False):
-                f = row.field if has_field else "text"
-                self._raw.setdefault((f, row.term), []).append(row)
         self._decoded: dict[tuple, tuple] = {}
 
     @property
@@ -415,31 +407,6 @@ class SegmentData:
             _decoded_put(gkey, out)
         return out
 
-    def _rows_with_positions(self, field: str, term: str) -> list:
-        """The (field, term)'s raw rows, guaranteed to carry position
-        columns.  Distributed mode ships postings WITHOUT pos_vb /
-        block_pos_off (the position stream is ~5x the rest of the row;
-        re-shipping it through the JVM on every query was the GC-aging
-        source at 10M) — a worker that actually needs positions and
-        misses every cache re-reads just this (segment, term) from the
-        postings parquet, term-pruned, once per process."""
-        rows = self._raw.get((field, term), [])
-        if (not rows or getattr(rows[0], "pos_vb", None) is not None
-                or self._cache_key is None):
-            return rows
-        post_root, seg = self._cache_key[0], self._cache_key[1]
-        import pyarrow.parquet as pq
-        try:
-            filters = [("term", "=", term)]
-            tb = pq.read_table(f"{post_root}/segment={seg}",
-                               filters=filters)
-        except OSError:
-            return rows
-        pdf = tb.to_pandas()
-        if "field" in pdf.columns:
-            pdf = pdf[pdf["field"] == field]
-        return list(pdf.itertuples(index=False))
-
     def _pos_index(self, field: str, term: str):
         """Per-sub-list position storage: (ids, flat_positions, offsets).
         The flat varbyte buffer is decoded ONCE (vectorized); per-doc
@@ -448,7 +415,7 @@ class SegmentData:
         if key in self._decoded:
             return self._decoded[key]
         subs = []
-        for r in self._rows_with_positions(field, term):
+        for r in self._raw.get((field, term), []):
             ids, tfs = codec.decode_postings(r.ids_vb, r.tfs_vb)
             flat = codec.varbyte_decode(r.pos_vb)
             offs = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))

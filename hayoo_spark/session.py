@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 48g: a local-mode JVM shares the
+    machine with its python workers, and a heap sized past the machine
+    lets it grow until the kernel kills it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "hayoo-spark",
     cores: int | None = None,
@@ -56,7 +64,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 os.environ.get("HAYOO_ARROW_BATCH_BYTES", "64m"))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("HAYOO_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("HAYOO_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

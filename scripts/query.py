@@ -62,9 +62,7 @@ def main(argv=None):
 
     eng = SearchEngine(spark, args.index, mode=args.mode)
     if args.warm:
-        # spark mode: also persist the postings relation + install the
-        # serving posture (AQE off, small shuffle partitions)
-        eng.warm(top_terms=args.warm, distributed=args.mode == "spark")
+        eng.warm(top_terms=args.warm)
     queries = args.query or [ln.strip() for ln in sys.stdin if ln.strip()]
     for q in queries:
         if args.complete:

@@ -129,13 +129,6 @@ def main():
             t0 = time.monotonic()
             eng.search(q, k=20, mode="spark")
             dist.append(time.monotonic() - t0)
-        eng.warm(distributed=True)
-        dist_mem = []
-        for q in ENGINE_QUERIES:
-            eng.search(q, k=20, mode="spark")
-            t0 = time.monotonic()
-            eng.search(q, k=20, mode="spark")
-            dist_mem.append(time.monotonic() - t0)
 
         def pctl(xs, p):
             xs = sorted(xs)
@@ -145,8 +138,6 @@ def main():
             "p50_ms": pctl(warm, 0.5), "p99_ms": pctl(warm, 0.99),
             "cold_p50_ms": pctl(cold, 0.5), "cold_p99_ms": pctl(cold, 0.99),
             "spark_p50_ms": pctl(dist, 0.5), "spark_p99_ms": pctl(dist, 0.99),
-            "spark_mem_p50_ms": pctl(dist_mem, 0.5),
-            "spark_mem_p99_ms": pctl(dist_mem, 0.99),
         }
     spark.stop()
 

@@ -29,7 +29,7 @@ def test_reference_query_set_local(engine, oracle_ix, q):
 @pytest.mark.parametrize(
     "q", QUERIES[::4], ids=[f"q{q['query_id']}_{q['kind']}" for q in QUERIES[::4]])
 def test_reference_query_set_spark(engine, oracle_ix, q):
-    """Distributed (grouped-map) mode: same evaluator, Spark merge —
+    """Spark mode: the same evaluation fanned out over executors —
     sampled every 4th query to bound suite time."""
     _check(engine, oracle_ix, q["query"], q["k"], q["page"], "spark")
 
@@ -168,3 +168,29 @@ def test_sharded_engines_union_equals_unsharded(spark, tmp_path):
         "baba AND bibaba", k=100)} or sa == []
     merged_sp = sorted(sa + sb, key=lambda t: (-t[1], t[0]))[:12]
     assert merged_sp == full.search("baba AND bibaba", k=12)
+
+
+@pytest.fixture(scope="module")
+def engine12(spark, pages_path, tmp_path_factory):
+    """The session corpus over 12 segments: more segments than the
+    default parallelism of 8, so spark-mode tasks evaluate several."""
+    from hayoo_spark.index.builder import build_index
+    from hayoo_spark.query.engine import SearchEngine
+
+    ix = str(tmp_path_factory.mktemp("ix12") / "ix")
+    build_index(spark, pages_path, ix, n_segments=12, salt_df_threshold=64,
+                n_salts=4)
+    return SearchEngine(spark, ix)
+
+
+@pytest.mark.parametrize("query", [
+    "baba", '"baba baba"', "baba AND NOT nibaba", "berababa OR lang:de"])
+def test_multi_segment_tasks_spark_equals_local(engine12, oracle_ix, query):
+    """Spark tasks that each evaluate a group of segments answer as
+    local mode and the oracle do: a term, a phrase, an AND-NOT and a
+    filter-branch query (segments holding none of the scoring terms)."""
+    assert len(engine12._segments) == 12
+    assert engine12.spark.sparkContext.defaultParallelism < 12
+    _check(engine12, oracle_ix, query, 20, 0, "spark")
+    assert engine12.search(query, k=20, mode="spark") == \
+        engine12.search(query, k=20, mode="local")

@@ -453,6 +453,26 @@ def test_repetition_signals(spark):
     assert out[1]["dup_lines"] / out[1]["n_lines"] == 0.5
 
 
+def test_repetition_twin_counts_are_int64():
+    """The DuckDB twin of t_repetition returns integer columns: a bare
+    sum() is HUGEINT there, which pandas reads as float64 and so hashes
+    differently from Spark's bigint."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as em
+
+    documents = pd.DataFrame({  # noqa: F841 (read by the SQL below)
+        "doc_id": pd.Series([1, 2, 3], dtype="int64"),
+        "text": ["aa bb data aa bb", "xx yy zz xx yy", None]})
+    out = duckdb.connect().execute(em.oracle_sql()["t_repetition"]).df()
+    assert len(out) == 3
+    for c in ("n_lines", "dup_lines", "top_bigram_n", "n_bigrams"):
+        assert out[c].dtype == "int64", (c, out[c].dtype)
+    assert out.set_index("doc_id")["n_bigrams"].to_dict() == \
+        {1: 3, 2: 4, 3: 0}
+
+
 def test_url_quality_filter(spark):
     """C4-style typed URL verdicts with first-failure precedence."""
     from hayoo_spark.ops.urls import url_quality_filter

@@ -28,17 +28,6 @@ def plan_ix(spark, tmp_path_factory):
     return SearchEngine(spark, ix), ix
 
 
-def test_postings_scan_pushes_term_filter(plan_ix):
-    """The distributed query path's term/field predicates must reach
-    the parquet reader (row-group pruning on term-sorted files)."""
-    eng, _ = plan_ix
-    post = eng._postings_df().filter(
-        F.col("term").isin(["baba"]) & F.col("field").isin(["text"]))
-    plan = _plan(post)
-    assert "PushedFilters" in plan
-    assert "term" in plan.split("PushedFilters")[1][:200]
-
-
 def test_docs_scan_prunes_segment_partition(plan_ix, spark):
     """A per-segment docs read must hit the hive partition filter,
     not scan every segment dir."""
@@ -126,31 +115,6 @@ def test_clean_corpus_drop_set_not_broadcast(spark):
     assert "LeftAnti" in plan
     joins = [ln for ln in plan.splitlines() if "Join LeftAnti" in ln]
     assert joins and all("broadcast" not in ln.lower() for ln in joins), joins
-
-
-def test_serving_posture_grouped_map_no_runtime_exchange(plan_ix):
-    """Under the serving posture the persisted postings relation is
-    hash-partitioned BY SEGMENT, so the per-query
-    groupBy("segment").applyInPandas satisfies its clustered
-    distribution straight from the cache: the only Exchange allowed is
-    the one-time REPARTITION inside the InMemoryRelation's build plan.
-    A runtime exchange here re-ships the Zipf-head term's encoded
-    posting buffers (tens of MB at 10M docs) on EVERY query — the
-    regression that made spark-mode p50 7.5 s at the 10M scale point."""
-    eng, _ = plan_ix
-    eng.warm(top_terms=0, positions_top=0, distributed=True)
-    try:
-        post = eng._postings_df().filter(
-            F.col("term").isin(["baba"]) & F.col("field").isin(["text"]))
-        grouped = post.groupBy("segment").applyInPandas(
-            lambda k, p: p.head(0), "url string, score double")
-        plan = _plan(grouped)
-        runtime_part = plan.split("InMemoryRelation")[0]
-        assert "InMemoryTableScan" in runtime_part
-        assert "Exchange" not in runtime_part
-    finally:
-        # leave the module-scoped engine out of posture for later tests
-        eng.spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_shingle_ops_tokenize_once_per_doc(spark):

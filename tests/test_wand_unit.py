@@ -1,6 +1,8 @@
 """Unit tests for the segment evaluator: block-max pruned == exhaustive
 (the WAND ≡ un-pruned invariant, SURVEY.md §5.3), no Spark needed."""
 
+from types import SimpleNamespace
+
 import numpy as np
 import pandas as pd
 
@@ -20,7 +22,7 @@ def make_segment(seed=7, n_docs=5000, terms=("alpha", "beta", "gamma", "delta"))
         "dl": dls,
     })
     avgdl = float(dls.mean())
-    rows = []
+    raw = {}
     for ti, t in enumerate(terms):
         df = int(n_docs * (0.5 ** (ti + 1)))
         ids = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
@@ -38,15 +40,14 @@ def make_segment(seed=7, n_docs=5000, terms=("alpha", "beta", "gamma", "delta"))
                 [np.arange(tf, dtype=np.uint64) * 3 + (ti % 3)
                  for tf in stfs])
             blast, bub = codec.block_maxes(sids, stfs, dls[sids], avgdl, 64)
-            rows.append({
-                "segment": 0, "term": t, "salt": s, "df": len(sids),
-                "cf": int(stfs.sum()), "ids_vb": ids_vb, "tfs_vb": tfs_vb,
-                "pos_vb": pos_vb, "block_last": blast.tolist(),
-                "block_ub": bub.tolist(), "max_ub": float(bub.max()),
-            })
-    post_pdf = pd.DataFrame(rows)
+            raw.setdefault(("text", t), []).append(SimpleNamespace(
+                segment=0, field="text", term=t, salt=s, df=len(sids),
+                cf=int(stfs.sum()), ids_vb=ids_vb, tfs_vb=tfs_vb,
+                pos_vb=pos_vb, block_last=blast.tolist(),
+                block_ub=bub.tolist(), max_ub=float(bub.max()),
+            ))
     idf = {t: 1.5 - 0.3 * i for i, t in enumerate(terms)}
-    sd = SegmentData(post_pdf, docs_pdf)
+    sd = SegmentData(docs_pdf, raw=raw)
     return SegmentEvaluator(sd, idf, avgdl), terms
 
 
@@ -304,51 +305,14 @@ def test_decoded_postings_cache_is_lru_and_read_only(monkeypatch):
     sd1._cache_key = key
     want = sd1.postings("text", terms[1])
     assert len(want[0]) > 0
-    got = SegmentData(None, sd1._docs, cache_key=key).postings(
+    got = SegmentData(sd1._docs, cache_key=key).postings(
         "text", terms[1])
     assert all(a is b for a, b in zip(want, got))
     assert not any(a.flags.writeable for a in got)
 
     sd1.postings("text", terms[2])
     # a new view touches terms[1] -> terms[2] is now least recent
-    SegmentData(None, sd1._docs, cache_key=key).postings("text", terms[1])
+    SegmentData(sd1._docs, cache_key=key).postings("text", terms[1])
     sd1.postings("text", terms[3])
     assert set(W._POSTINGS_CACHE) == {key + ("text", terms[1]),
                                       key + ("text", terms[3])}
-
-
-def test_stripped_rows_refetch_positions_from_parquet(tmp_path):
-    """Distributed mode ships posting rows WITHOUT pos_vb /
-    block_pos_off.  A worker that needs positions and has not decoded
-    them yet must re-read its (segment, term) from the postings parquet
-    (SegmentData._rows_with_positions) and produce the same position
-    stream as a full-row SegmentData."""
-    from hayoo_spark.query import wand
-
-    ev, terms = make_segment()
-    full = ev.seg
-    # write the raw rows as a hive-style postings segment dir
-    pdir = tmp_path / "postings" / "segment=0"
-    pdir.mkdir(parents=True)
-    rows = []
-    for subs in full._raw.values():
-        rows.extend(subs)
-    pdf = pd.DataFrame(rows)
-    pdf.drop(columns=["segment"]).to_parquet(pdir / "part-0.parquet",
-                                             index=False)
-    post_root = str(tmp_path / "postings")
-    key = (post_root, 0, 1.0, (("text", 100.0),))
-    with wand._POSTINGS_CACHE_LOCK:
-        wand._POSTINGS_CACHE.clear()
-    stripped = pdf.drop(columns=["pos_vb", "segment"])
-    sd = SegmentData(stripped, pd.DataFrame({
-        "doc_id": np.arange(full.n_docs), "url": full.urls,
-        "lang": full.langs, "warc_ts": pd.to_datetime("2024-01-01"),
-        "dl": full.dls["text"],
-    }), cache_key=key)
-    sd._avgdl = {"text": 100.0}
-    for t in terms[:2]:
-        want = full.positions_flat("text", t)
-        got = sd.positions_flat("text", t)
-        for a, b in zip(want, got):
-            np.testing.assert_array_equal(a, b)
